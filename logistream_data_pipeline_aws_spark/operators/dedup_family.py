@@ -90,25 +90,28 @@ def capped_bucket_pairs(
     The cap bounds both the per-task memory of the collect_set array and
     the O(bucket²) pair expansion — the two failure modes of banded LSH on
     a corpus with a degenerate near-duplicate mass.  The cap is applied
-    BEFORE any id array is collected: a cheap map-side-combinable count per
-    band, then an equi-join that keeps only 2..max rows — so a 10⁶-doc
-    bucket never materializes in a single task at any point.  Both the
-    count and the collect shuffle on the same band key, so AQE reuses the
-    partitioning (one logical extra pass, no extra wide exchange).
+    BEFORE any id array is collected: a plain count per band, then an
+    equi-join that keeps only 2..max rows — so a 10⁶-doc bucket never
+    materializes in a single task at any point.
     ``max_bucket_size=None`` disables the cap (small-corpus/test use only).
 
-    CONTRACT: ``banded`` holds at most one row per (band, id).  Every
-    in-repo band generator satisfies it by construction (an explode of a
-    per-id array of index-prefixed band keys), which lets the cap count
-    be a plain map-side-combinable ``count(1)`` — ``countDistinct`` here
-    planned an extra full (band, id) de-dup exchange before the per-band
-    count, doubling the shuffled bytes of the cap pass for nothing.
+    Duplicate (band, id) rows are legal and count once: the capped path
+    shuffles the rows on the band key once and drops duplicates there;
+    the per-band count, the keep-join and the collect all reuse that
+    partitioning (the count side as a ``ReusedExchange``), where a
+    ``countDistinct`` would plan its own (band, id) exchange on top.
     """
     if max_bucket_size is None:
         buckets = banded.groupBy(band_col).agg(
             F.array_sort(F.collect_set(id_col)).alias("ids")
         ).where(F.size("ids") > 1)
     else:
+        banded = (
+            banded.select(band_col, id_col)
+            .where(F.col(band_col).isNotNull())
+            .repartition(band_col)
+            .dropDuplicates([band_col, id_col])
+        )
         counts = banded.groupBy(band_col).agg(
             F.count(F.lit(1)).alias("_n_ids")
         )

@@ -12,12 +12,19 @@ Glue jobs with TRUNCATE/JDBC round trips.  Differences by design:
   the fact's ``customer_geo_key`` (DS:100, never computed in GE).
 - The LJ:40 dest_long bug is *not* replicated (sources.geojson), so
   route lookups actually hit.
+- Dims land first and the fact joins the landed keys, as in the
+  reference's job order: ``build_warehouse`` stages each dimension
+  (one cached partition each) so one load derives every dim once, and
+  ``write_warehouse`` releases the staged frames after the fact write.
 - The 20/50-bucket sequential write loops (GE:150-162, GE:352-362)
-  become single ``repartition(N, key)`` writes (functions.keys
-  .write_bucketed).
+  disappear: the dims are single-file overwrites, and the fact is one
+  write partitioned on ``order_month``, rebalanced so each month lands
+  as one file (AQE splits a month only when it outgrows the advisory
+  partition size).
 
 Every lookup side is dimension-sized -> broadcast; the fact table never
-shuffles (SURVEY §4.4) — the plan that still works at 100 TB.
+shuffles for a lookup (SURVEY §4.4) — the plan that still works at
+100 TB.
 """
 
 from __future__ import annotations
@@ -258,16 +265,30 @@ def build_fact(
 
 
 def build_warehouse(
-    rawdata: DataFrame, processed_routes: DataFrame, stage_dims: bool = False
+    rawdata: DataFrame, processed_routes: DataFrame, stage_dims: bool = True
 ) -> dict[str, DataFrame]:
     """The whole DAG: 8 dims + fact, as one lazy plan dictionary.
 
-    ``stage_dims=True`` persists each dimension frame before the fact
-    references it — the staged-warehouse shape every production load
-    uses (dims land first, fact loads join against the landed tables).
-    Without it the fact plan EMBEDS five dim subplans and re-executes
-    their dedup+keygen over rawdata on every fact action.  Results are
-    identical either way; only the physical reuse changes.
+    By default each dimension is staged — ``coalesce(1)`` then
+    ``persist(MEMORY_AND_DISK)`` — before the fact references it: the
+    shape of the reference's load (dims land first, the fact joins the
+    landed keys).  One load then derives each dim's dedup + keygen once;
+    the first action on a dim fills its cache and every later reader (a
+    child dim, the fact's broadcast lookups) scans it.  Dims are small by
+    construction — every one is keyed by ``with_sequential_key``'s
+    triangular rank join, fine for d ≤ ~10⁴ — so one partition each is
+    the layout AQE would coalesce them to anyway; without the
+    ``coalesce(1)`` a persisted plan keeps its 32 shuffle partitions
+    (AQE does not coalesce a cached plan's output) and each dim writes
+    32 files.
+
+    The staged frames stay cached until ``write_warehouse`` writes the
+    fact, or until the caller unpersists them; Spark matches cached data
+    by plan, so a staged dim outliving its load would serve old rows to
+    a later load of a rewritten file at the same path.
+    ``stage_dims=False`` returns the unstaged plans: the fact then
+    embeds five dim subplans and re-derives them on every action.
+    Results are identical either way.
     """
 
     def stage(df: DataFrame) -> DataFrame:
@@ -275,7 +296,7 @@ def build_warehouse(
             return df
         from pyspark import StorageLevel
 
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
+        return df.coalesce(1).persist(StorageLevel.MEMORY_AND_DISK)
 
     dim_department = stage(build_dim_department(rawdata))
     dim_category = stage(build_dim_category(rawdata, dim_department))
@@ -302,15 +323,18 @@ def build_warehouse(
     }
 
 
-def write_warehouse(
-    warehouse: dict[str, DataFrame],
-    base_path: str,
-    fact_buckets: int = 20,
-) -> None:
-    """Persist the warehouse: dims as single overwrite tables (replacing
-    the reference's TRUNCATE+append, GE:46-59), the fact hash-distributed
-    on order_id in ONE job (replacing the 20 sequential bucket-filtered
-    loads, GE:352-362) AND directory-partitioned on the order month.
+def write_warehouse(warehouse: dict[str, DataFrame], base_path: str) -> None:
+    """Persist the warehouse under ``base_path``, one directory per table.
+
+    The dims are written first, in dict order, as single overwrite tables
+    (replacing the reference's TRUNCATE+append, GE:46-59); a staged dim
+    fills its cache on that write, so the fact write reads it from
+    memory.  The fact is then written in ONE job (replacing the 20
+    sequential bucket-filtered loads, GE:352-362), directory-partitioned
+    on the order month and rebalanced on it, so each month lands as one
+    file.  AQE's rebalance splits a month only when it outgrows the
+    advisory partition size, so the file count follows the data with no
+    bucket-count knob.
 
     The time axis is the dominant filter of every dashboard query
     (A5-A8 all slice by date); hive partitioning on ``order_month``
@@ -320,20 +344,30 @@ def write_warehouse(
     the table.  Unparseable dates land in the hive default partition,
     still queryable, never silently dropped.  The reference can't show
     this layer (Redshift owns its storage); it is what the DDL's
-    date-keyed fact implies."""
+    date-keyed fact implies.
+
+    After the fact is written, every cached frame of ``warehouse`` is
+    unpersisted, so no staged dim outlives its load.  A dict without the
+    fact releases nothing; a caller that writes the tables one dict at a
+    time unpersists the staged dims itself."""
     import os
 
-    from logistream_data_pipeline_aws_spark.functions.keys import write_bucketed
     from logistream_data_pipeline_aws_spark.sources.io import write_table
 
+    fact_name = "fact_supplychain_events"
     for name, df in warehouse.items():
-        path = os.path.join(base_path, name)
-        if name == "fact_supplychain_events":
-            fact = df.withColumn(
-                "order_month", F.expr("order_date_key div 100").cast("int")
-            )
-            write_bucketed(
-                fact, "order_id", fact_buckets, path, partition_by=["order_month"]
-            )
-        else:
-            write_table(df, path)
+        if name != fact_name:
+            write_table(df, os.path.join(base_path, name))
+    if fact_name not in warehouse:
+        return
+    fact = warehouse[fact_name].withColumn(
+        "order_month", F.expr("order_date_key div 100").cast("int")
+    )
+    write_table(
+        fact.hint("rebalance", F.col("order_month")),
+        os.path.join(base_path, fact_name),
+        partition_by=["order_month"],
+    )
+    for df in warehouse.values():
+        if df.is_cached:
+            df.unpersist()

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 from logistream_data_pipeline_aws_spark.functions.keys import (
     with_sequential_key,
     with_surrogate_key,
@@ -71,10 +73,18 @@ def test_lsh_bucket_cap_drops_degenerate_bucket_before_expansion(spark):
     rows = [("deg", i) for i in range(1300)] + [("ok", 5000 + j) for j in range(3)]
     banded = spark.createDataFrame(rows, ["band", "doc_id"])
 
-    pairs = capped_bucket_pairs(banded, "band", "doc_id").collect()
+    capped = capped_bucket_pairs(banded, "band", "doc_id")
+    pairs = capped.collect()
     # the degenerate bucket would alone expand 1300*1299/2 = 844,350 pairs
     assert len(pairs) == 3  # only the healthy bucket's C(3,2)
     assert all(r.id_a >= 5000 and r.id_b >= 5000 for r in pairs)
+    # the (band, id) dedup, the cap count and the collect share ONE shuffle
+    # of the rows on the band key; the count side reuses it
+    final = capped._jdf.queryExecution().executedPlan().toString().split(
+        "== Initial Plan =="
+    )[0]
+    assert len(re.findall(r"\+- Exchange hashpartitioning\(band", final)) == 1
+    assert "ReusedExchange" in final
 
     dropped = oversized_buckets(banded, "band", "doc_id").collect()
     assert [(r.band, r.n_ids) for r in dropped] == [("deg", 1300)]

@@ -461,7 +461,7 @@ def test_write_warehouse_roundtrip(spark, tmp_path):
     geo.write_text(_json.dumps(ROUTES_GEOJSON))
     wh = build_warehouse(make_rawdata(spark), flatten_geojson_routes(read_geojson(spark, str(geo))))
     out = str(tmp_path / "wh")
-    write_warehouse(wh, out, fact_buckets=4)
+    write_warehouse(wh, out)
     fact_back = spark.read.parquet(f"{out}/fact_supplychain_events")
     assert fact_back.count() == wh["fact_supplychain_events"].count()
     assert spark.read.parquet(f"{out}/dim_date").count() == wh["dim_date"].count()

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import datetime
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from logistream_data_pipeline_aws_spark.functions.dates import parse_raw_date
@@ -94,6 +94,7 @@ def test_ranged_keygen_equals_global_rank(spark, keys):
         max_size=60,
     )
 )
+@example(rows=[(0, 0), (0, 0), (0, 0), (0, 0), (0, 1)])  # duplicate (band, id) rows
 def test_capped_bucket_pairs_equals_uncapped_restricted(spark, rows):
     """capped_bucket_pairs must equal the uncapped pair expansion
     restricted to buckets of size 2..cap — for arbitrary bucket shapes,

@@ -95,11 +95,98 @@ def test_route_join_hits_with_bug_fixed(warehouse):
     assert orphan.count() == 1
 
 
+def _plan_nodes(df) -> list[str]:
+    """Node names of ``df``'s physical plan.  A cached relation is one
+    ``InMemoryTableScan`` leaf: the plan that filled it is not descended."""
+    nodes, stack = [], [df._jdf.queryExecution().sparkPlan()]
+    while stack:
+        node = stack.pop()
+        nodes.append(node.nodeName())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return nodes
+
+
 def test_fact_plan_is_all_broadcast(warehouse):
     _, wh = warehouse
     plan = wh["fact_supplychain_events"]._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan  # the fact side must never shuffle
+
+
+def test_fact_plan_reads_staged_dims(spark, tmp_path):
+    """The fact's five lookups read the staged dims from their caches, so
+    no dim dedup or keygen is re-derived inside the fact plan: the
+    triangular rank join of the keygen is the DAG's only nested-loop
+    join.  Unstaged, the fact embeds the keygens."""
+    routes = flatten_geojson_routes(read_geojson(spark, write_routes_geojson(tmp_path)))
+    # 50 orders: a frame whose plan no other test's cached frames share
+    raw = make_rawdata(spark, n_orders=50)
+    wh = RP.build_warehouse(raw, routes)
+    staged = _plan_nodes(wh["fact_supplychain_events"])
+    for df in wh.values():
+        df.unpersist()
+    assert staged.count("InMemoryTableScan") >= 5
+    assert "BroadcastNestedLoopJoin" not in staged
+    assert "BroadcastHashJoin" in staged and "SortMergeJoin" not in staged
+    embedded = RP.build_warehouse(raw, routes, stage_dims=False)
+    assert "BroadcastNestedLoopJoin" in _plan_nodes(embedded["fact_supplychain_events"])
+
+
+def _write_csv(frame, path: str, scratch) -> None:
+    """Land ``frame`` as ONE csv file at ``path``, replacing any file there."""
+    import glob
+    import shutil
+
+    frame.coalesce(1).write.mode("overwrite").csv(str(scratch), header=True)
+    shutil.copyfile(glob.glob(f"{scratch}/part-*.csv")[0], path)
+
+
+def test_write_warehouse_releases_staged_dims(spark, tmp_path):
+    """Spark matches cached data by plan, and a CSV rewritten in place
+    keeps its plan: a staged dim that outlived its load would serve the
+    old rows to the next load.  After a full-dict write nothing of the
+    load stays cached, and the second load sees the new customers."""
+    from pyspark import StorageLevel
+
+    from logistream_data_pipeline_aws_spark.catalog import RAWDATA_SCHEMA
+    from logistream_data_pipeline_aws_spark.sources.io import read_csv
+
+    routes = flatten_geojson_routes(read_geojson(spark, write_routes_geojson(tmp_path)))
+    csv, out = str(tmp_path / "rawdata.csv"), str(tmp_path / "wh")
+    raw = make_rawdata(spark)
+    moved = raw.withColumn("customer_id", F.col("customer_id") + 1000).withColumn(
+        "order_customer_id", F.col("order_customer_id") + 1000
+    )
+    counts = []
+    for frame in (raw, raw.unionByName(moved)):  # 20 customers, then 40
+        _write_csv(frame, csv, tmp_path / "csv_out")
+        wh = RP.build_warehouse(read_csv(spark, csv, RAWDATA_SCHEMA), routes)
+        RP.write_warehouse(wh, out)
+        for name, df in wh.items():
+            assert not df.is_cached, name
+            assert df.storageLevel == StorageLevel.NONE, name
+        counts.append(spark.read.parquet(f"{out}/dim_customer").count())
+    assert counts == [20, 40]
+
+
+def test_write_warehouse_lands_one_file_per_month(spark, tmp_path):
+    """The fact lands as one parquet file per ``order_month`` directory
+    and each staged dim as one file."""
+    import glob
+
+    routes = flatten_geojson_routes(read_geojson(spark, write_routes_geojson(tmp_path)))
+    out = str(tmp_path / "wh")
+    # 60 orders: a frame whose plan no other test's staged dims share
+    wh = RP.build_warehouse(make_rawdata(spark, n_orders=60), routes)
+    RP.write_warehouse(wh, out)
+    months = glob.glob(f"{out}/fact_supplychain_events/order_month=*")
+    assert len(months) > 1
+    for month in months:
+        assert len(glob.glob(f"{month}/*.parquet")) <= 1, month
+    for name in wh:
+        if name.startswith("dim_"):
+            assert len(glob.glob(f"{out}/{name}/*.parquet")) == 1, name
 
 
 def test_synthetic_rawdata_schema_and_build(spark):
