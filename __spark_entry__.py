@@ -523,61 +523,48 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # digest to the manifest recorded at their last green round — a
     # changed tail entry fails CI until rotated back into the head.
     return {
-    # ==== ROUND-14 HEAD WINDOW (the driver records the first ~50) ====
-    # Composition per VERDICT r13 next-round #1 and COVERAGE.md
-    # "Round-14 rotation queue (set at round-13 close)":
-    #   1. the 5 entries changed this round — the durable substring
-    #      staging rework (content-vs-layout manifest split, hardened
-    #      reaper, retired-variant GC, slot-aware shard bounds) drifts
-    #      the substring trio + the staged twin + the composed
-    #      pipeline's digests, and graph_kcore gained the
-    #      checkpoint_every>=1 validation (ADVICE r13);
-    #   2. corpus_domain_cap (r10-green, displaced from the r13 window
-    #      by the late kcore cadence adoption — queue leader);
-    #   3. the full 44-entry r10-green block in tail order
-    #      (corpus_gopher_rules .. similarity_ivf_incremental).
-    # 5 + 1 + 44 = exactly the 50-slot window; no registrations this
-    # round (registry stays 193 <= 196).
-    # -- group 0: changed by the staged-dim warehouse load and the
-    #    capped_bucket_pairs duplicate fix (digests drifted through
-    #    plans.reference_pipeline / operators.dedup_family); they
-    #    enter the head from the tail, and the five r10-green TPC-H
-    #    SQL views they displace rotate to the end of the tail
-    #    (digests unchanged) ----------------------------------------
+    # ==== HEAD WINDOW (the driver records the first ~50) =============
+    # All 50 slots hold the entries whose digests the session staging
+    # registry drifted (logistream_data_pipeline_aws_spark/staging.py
+    # replaced the per-module caches in plans/, the single-slot
+    # signature cache left operators/dedup_family.py, the unused
+    # ranged_keygen option left build_dimension, and the keygen module
+    # docstring was corrected).  See COVERAGE.md "Staging registry
+    # rotation".
+    # -- group 0: drifted tail entries, entering the head -------------
+        "doc_bigram_score": X.doc_bigram_score,
+        "corpus_dsir_weights": X.corpus_dsir_weights,
+        "scd2_daily_snapshot": X.scd2_daily_snapshot,
+        "warehouse_orc_readback": X.warehouse_orc_readback,
+        "orders_zorder_clustering": X.orders_zorder_clustering,
+        "scd2_user_state": X.scd2_user_state,
+        "supplier_pagerank": X.supplier_pagerank,
+        "fact_date_slice": X.fact_date_slice,
+        "dim_customer": W.dim_customer,
+        "bm25_topk": X.bm25_topk,
+        "dim_product": W.dim_product,
+        "dim_product_type": W.dim_product_type,
+        "dim_brand": W.dim_brand,
+        "fact_lineitem": W.fact_lineitem,
+        "fact_lineitem_bucketed": W.fact_lineitem_bucketed,
+        "fact_write_readback": X.fact_write_readback,
+        "events_upsert_delete": X.events_upsert_delete,
+        "events_upsert_changes": X.events_upsert_changes,
+        "events_upsert_timetravel": X.events_upsert_timetravel,
+        "lineitem_abc_pareto_approx": A.lineitem_abc_pareto_approx,
+        "graph_hop_distance": X.graph_hop_distance,
+    # -- group 1: drifted entries already in the head ----------------
         "dedup_minhash_staged": X.dedup_minhash_staged,
-        "dim_route_shapes": X.dim_route_shapes,
         "doc_bigram_score_staged": X.doc_bigram_score_staged,
         "corpus_dsir_weights_staged": X.corpus_dsir_weights_staged,
         "bm25_topk_staged": X.bm25_topk_staged,
-    # -- group 1: changed this round ------------------------------------
         "doc_substring_spans": X.doc_substring_spans,
         "doc_substring_dedup": X.doc_substring_dedup,
         "doc_substring_dedup_staged": X.doc_substring_dedup_staged,
         "corpus_dedup_pipeline": X.corpus_dedup_pipeline,
         "graph_kcore": X.graph_kcore,
-    # -- group 2: queue leader (stalest green row, r10) -----------------
-        "corpus_domain_cap": X.corpus_domain_cap,
-    # -- group 3: the r10-green block (stalest-first tail order) --------
         "corpus_gopher_rules": X.corpus_gopher_rules,
-        "events_feature_matrix": X.events_feature_matrix,
-        "similarity_recall_audit": X.similarity_recall_audit,
-        "graph_triangle_count": X.graph_triangle_count,
-        "repeat_customers_yoy": A.repeat_customers_yoy,
-        "brand_share_within_type": A.brand_share_within_type,
-        "daily_sales_range_frame": A.daily_sales_range_frame,
-        "sql_small_quantity_revenue": V.sql_small_quantity_revenue,
         "lineitem_abc_pareto": A.lineitem_abc_pareto,
-        "a6_sales_trend_mom": A.a6_sales_trend_mom,
-        "a5_profit_rollup": A.a5_profit_rollup,
-        "a6_sales_trend": A.a6_sales_trend,
-        "a7_schedule_adherence": A.a7_schedule_adherence,
-        "cumulative_monthly_sales": A.cumulative_monthly_sales,
-        "acctbal_band_join": A.acctbal_band_join,
-        "customer_rank_in_nation": A.customer_rank_in_nation,
-        "a5_profit_by_hierarchy": A.a5_profit_by_hierarchy,
-        "a5_profit_cube": A.a5_profit_cube,
-        "segment_region_pivot": A.segment_region_pivot,
-        "sql_shipping_priority": V.sql_shipping_priority,
         "dedup_semantic": X.dedup_semantic_k8,
         "dedup_exact": X.dedup_exact,
         "dedup_survivors": X.dedup_survivors,
@@ -596,23 +583,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_incremental_ingest": X.dedup_incremental_ingest,
         "dedup_embedding": X.dedup_embedding,
         "dedup_minhash_lsh": X.dedup_minhash_lsh,
-        "similarity_ivf_incremental": X.similarity_ivf_incremental,
     # ===== ~50-entry driver window boundary.  Everything below is
-    #    tail: green in r11-r13 (rows+schema+hash), digest-pinned since
-    #    its green row (tests/test_rotation_ledger.py), stalest first:
-    #    the r11-green block leads (dedup_minhash_staged ..), then the
-    #    r12 head window (rotated here intact at r13 close), then the
-    #    r13 head window (newest rows last, minus the 5 changed entries
-    #    and corpus_domain_cap re-entering the r14 head).  The two
-    #    sketch-only prod twins and sql_profit_by_hierarchy stay
-    #    deregistered (bench.py + tests/test_prod_twins.py pins).
+    #    tail: digest-pinned since its green row
+    #    (tests/test_rotation_ledger.py), stalest first; the 21
+    #    unchanged entries the staging rotation displaced from the head
+    #    close the tail.  The two sketch-only prod twins and
+    #    sql_profit_by_hierarchy stay deregistered (bench.py +
+    #    tests/test_prod_twins.py pins).
     # ==================================================================
-        "doc_bigram_score": X.doc_bigram_score,
-        "corpus_dsir_weights": X.corpus_dsir_weights,
         "media_image_features": X.media_image_features,
         "bpe_encode_stats": X.bpe_encode_stats,
         "events_conversion_lag": X.events_conversion_lag,
-        "scd2_daily_snapshot": X.scd2_daily_snapshot,
         "customer_rfm_scores_approx": A.customer_rfm_scores_approx_checked,
         "events_salted_user_stats": X.events_salted_user_stats,
         "sales_forecast_ses": X.sales_forecast_ses,
@@ -653,7 +634,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "routes_csv_readback": X.routes_csv_readback,
         "sequence_packing": X.sequence_packing,
         "user_sessions": X.user_sessions,
-        "warehouse_orc_readback": X.warehouse_orc_readback,
         "dim_region": W.dim_region,
         "dim_geography": W.dim_geography,
         "sql_cheapest_supplier": V.sql_cheapest_supplier,
@@ -690,32 +670,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_value_binning": X.events_value_binning,
         "doc_chunking": X.doc_chunking,
         "snapshot_cdc_diff": X.snapshot_cdc_diff,
-        "orders_zorder_clustering": X.orders_zorder_clustering,
-        "scd2_user_state": X.scd2_user_state,
         "corpus_stratified_sample": X.corpus_stratified_sample,
         "warehouse_integrity_audit": X.warehouse_integrity_audit,
         "corpus_shard_manifest": X.corpus_shard_manifest,
         "incremental_agg_maintenance": X.incremental_agg_maintenance,
         "events_heavy_hitters": X.events_heavy_hitters,
-        "supplier_pagerank": X.supplier_pagerank,
-        "fact_date_slice": X.fact_date_slice,
         "events_json_readback": X.events_json_readback,
-        "dim_customer": W.dim_customer,
         "corpus_coreset_kcenter": X.corpus_coreset_kcenter,
-        "bm25_topk": X.bm25_topk,
-        "dim_product": W.dim_product,
-        "dim_product_type": W.dim_product_type,
-        "dim_brand": W.dim_brand,
-        "fact_lineitem": W.fact_lineitem,
-        "fact_lineitem_bucketed": W.fact_lineitem_bucketed,
-        "fact_write_readback": X.fact_write_readback,
         "pii_scrub_stats": X.pii_scrub_stats,
         "similarity_ivf_pq": X.similarity_ivf_pq,
         "media_audio_windows": X.media_audio_windows,
-        "events_upsert_delete": X.events_upsert_delete,
         "events_stream_upsert": X.events_stream_upsert,
-        "events_upsert_changes": X.events_upsert_changes,
-        "events_upsert_timetravel": X.events_upsert_timetravel,
         "events_stream_jdbc_upsert": X.events_stream_jdbc_upsert,
         "events_stream_jdbc_hourly": X.events_stream_jdbc_hourly,
         "events_stream_hourly": X.events_stream_hourly,
@@ -733,11 +698,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_cohort_retention": A.events_cohort_retention,
         "multimodal_meta": X.multimodal_meta,
         "media_frames": X.media_frames,
-        "lineitem_abc_pareto_approx": A.lineitem_abc_pareto_approx,
         "route_geometry_stats": X.route_geometry_stats,
         "orders_backlog_series": A.orders_backlog_series,
         "events_attribution_decayed": X.events_attribution_decayed,
-        "graph_hop_distance": X.graph_hop_distance,
         "events_funnel": A.events_funnel,
         "customer_rfm_scores": A.customer_rfm_scores,
         "events_value_quantiles": X.events_value_quantiles,
@@ -750,6 +713,28 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sql_volume_shipping": V.sql_volume_shipping,
         "sql_market_share": V.sql_market_share,
         "sql_lapsed_big_spenders": V.sql_lapsed_big_spenders,
+    # -- displaced from the head by the staging rotation (unchanged) --
+        "dim_route_shapes": X.dim_route_shapes,
+        "corpus_domain_cap": X.corpus_domain_cap,
+        "events_feature_matrix": X.events_feature_matrix,
+        "similarity_recall_audit": X.similarity_recall_audit,
+        "graph_triangle_count": X.graph_triangle_count,
+        "repeat_customers_yoy": A.repeat_customers_yoy,
+        "brand_share_within_type": A.brand_share_within_type,
+        "daily_sales_range_frame": A.daily_sales_range_frame,
+        "sql_small_quantity_revenue": V.sql_small_quantity_revenue,
+        "a6_sales_trend_mom": A.a6_sales_trend_mom,
+        "a5_profit_rollup": A.a5_profit_rollup,
+        "a6_sales_trend": A.a6_sales_trend,
+        "a7_schedule_adherence": A.a7_schedule_adherence,
+        "cumulative_monthly_sales": A.cumulative_monthly_sales,
+        "acctbal_band_join": A.acctbal_band_join,
+        "customer_rank_in_nation": A.customer_rank_in_nation,
+        "a5_profit_by_hierarchy": A.a5_profit_by_hierarchy,
+        "a5_profit_cube": A.a5_profit_cube,
+        "segment_region_pivot": A.segment_region_pivot,
+        "sql_shipping_priority": V.sql_shipping_priority,
+        "similarity_ivf_incremental": X.similarity_ivf_incremental,
     }
 
 

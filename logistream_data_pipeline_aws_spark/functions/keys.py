@@ -6,13 +6,20 @@ DS:41, DS:64, DS:72, DS:82): rows are written without keys and read back to
 learn them (etl_jobs/glue_master_etl.py GE:114, GE:117-128).  A Spark-native
 engine generates keys in-plan, killing the write→read-back round trip.
 
-Two strategies, chosen by table size:
+Three strategies, chosen by table size:
 
-- ``with_sequential_key`` — ``row_number() OVER (ORDER BY natural key)``;
-  exact 1..N contiguity matching IDENTITY semantics and fully deterministic
-  (testable).  The global window implies a single-partition sort of the
-  *deduplicated dimension*, which is small by construction — fine for dims,
-  wrong for facts.
+- ``with_sequential_key`` — the ``row_number() OVER (ORDER BY natural
+  key)`` keys (exact 1..N contiguity matching IDENTITY semantics, fully
+  deterministic), computed as a triangular broadcast self-join over the
+  *deduplicated dimension*, not a window: O(d²) comparisons, meant for
+  tiny dims.  Its own docstring says entity-sized dims use the ranged
+  form, but the reference pipeline's ``dim_customer`` / ``dim_product``
+  use this join too: a traced warehouse load's ``dim_customer`` write
+  went 1.35 s -> 7.44 s for 1000 -> 4000 customers (the open ``FOUND:``
+  item in CHANGES.md).
+- ``with_sequential_key_ranged`` — the same keys over one numeric natural
+  key, decomposed into range buckets so no plan node is unpartitioned
+  and the cost stays linear; the TPC-H key maps use it.
 - ``with_surrogate_key`` — scale-safe: ``monotonically_increasing_id`` is
   unique and parallel (partition-id in the high bits) but non-contiguous
   and plan-dependent.  Use for fact-grain ids at 100 TB where a global sort

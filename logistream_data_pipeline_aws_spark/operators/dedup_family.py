@@ -24,8 +24,6 @@ murmur3 so every operator has an exact DuckDB oracle.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -162,14 +160,6 @@ def oversized_buckets(
 # overflow); P is the Mersenne prime 2^61-1.  One md5 per shingle total —
 # the k 'permutations' are integer ops (the classic universal-hash family).
 MINHASH_P = (1 << 61) - 1
-
-# Most recent persisted signature frame (see minhash_near_duplicates).
-# Guarded by _SIG_CACHE_LOCK; still a deliberately single-slot cache — a
-# second call evicts the first call's cache, so callers interleaving TWO
-# lazy minhash results should pass their own persisted ``sigs`` frame
-# instead of relying on the module cache.
-_LAST_SIG_CACHE = None
-_SIG_CACHE_LOCK = threading.Lock()
 
 
 def _minhash_coeffs(s: int) -> tuple[int, int]:
@@ -634,9 +624,10 @@ def minhash_near_duplicates(
     (id_a, id_b, jaccard) for pairs >= threshold.
 
     ``sigs``: a caller-owned (ideally persisted) ``minhash_signatures``
-    frame; the caller then controls the cache lifecycle entirely.  When
-    omitted, the frame is persisted into a lock-guarded single-slot module
-    cache (the next call evicts it — fine for sequential query runners).
+    frame; the caller controls its lifecycle.  When omitted, the
+    signatures are built inline and not persisted, so candidate
+    generation and the verify join each derive them — the reference
+    form; every query stages its own frame and passes it.
 
     ``prefer_merge`` is the same big-big merge-join insurance as
     ``prefix_filter_pairs``: the verify joins carry the corpus's full
@@ -648,23 +639,7 @@ def minhash_near_duplicates(
     below a corpus-size threshold and keep the broadcast on small
     data."""
     if sigs is None:
-        # The signature frame feeds BOTH candidate generation and the verify
-        # join — persist it so tokenize/shingle/hash runs once.  At warehouse
-        # scale this is the materialized signature staging table.
-        global _LAST_SIG_CACHE
-        with _SIG_CACHE_LOCK:
-            # unpersist the previous cache BEFORE persisting the new frame:
-            # the cache manager is keyed by logical plan, so with identical
-            # plans an unpersist-after would evict the new cache too
-            # (verified empirically)
-            if _LAST_SIG_CACHE is not None:
-                try:
-                    _LAST_SIG_CACHE.unpersist()
-                except Exception:  # session may be gone
-                    pass
-                _LAST_SIG_CACHE = None
-            sigs = minhash_signatures(df, id_col, text_col, k_shingle, n_hashes).persist()
-            _LAST_SIG_CACHE = sigs
+        sigs = minhash_signatures(df, id_col, text_col, k_shingle, n_hashes)
     cands = lsh_candidate_pairs(sigs, n_hashes, bands)
     sh = sigs.select("doc_id", "shingles")
     a = sh.withColumnRenamed("doc_id", "id_a").withColumnRenamed("shingles", "sh_a")

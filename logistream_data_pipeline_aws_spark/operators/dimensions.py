@@ -22,10 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from logistream_data_pipeline_aws_spark.functions.dates import with_calendar, date_key
-from logistream_data_pipeline_aws_spark.functions.keys import (
-    with_sequential_key,
-    with_sequential_key_ranged,
-)
+from logistream_data_pipeline_aws_spark.functions.keys import with_sequential_key
 from logistream_data_pipeline_aws_spark.operators.dedup import dedup_first
 
 
@@ -36,7 +33,6 @@ def build_dimension(
     key_name: str,
     parent: DataFrame | None = None,
     parent_on: Sequence[str] | None = None,
-    ranged_keygen: bool = False,
 ) -> DataFrame:
     """Project+rename -> deterministic dedup -> optional parent-key join ->
     sequential surrogate key.
@@ -46,12 +42,9 @@ def build_dimension(
     *output* names and uniquely identify a dimension row; they double as
     the key-assignment ordering, so keys are reproducible run-over-run.
     The parent join (hierarchy chaining, GE:123/GE:135) broadcasts the
-    parent side — dims are small by construction.
-
-    ``ranged_keygen=True`` switches to the scale-safe distributed keygen
-    (``with_sequential_key_ranged``; requires a single numeric natural
-    key) — same key assignment, no single-partition window.  Use it for
-    entity-sized dims (customer/product); flag dims keep the plain window.
+    parent side — dims are small by construction.  The key is
+    ``with_sequential_key``'s triangular rank join, O(d²) in the dim's
+    row count.
     """
     cols = [
         (F.col(v) if isinstance(v, str) else v).alias(k) for k, v in attrs.items()
@@ -65,12 +58,6 @@ def build_dimension(
                 "would silently cross-join the parent dimension)"
             )
         dim = dim.join(F.broadcast(parent), on=list(parent_on), how="left")
-    if ranged_keygen:
-        if len(natural_key) != 1:
-            raise ValueError(
-                "ranged_keygen requires a single numeric natural-key column"
-            )
-        return with_sequential_key_ranged(dim, key_name, natural_key[0])
     return with_sequential_key(dim, key_name, order_by=list(natural_key))
 
 

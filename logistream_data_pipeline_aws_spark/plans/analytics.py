@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logistream_data_pipeline_aws_spark.catalog import load_table
+from logistream_data_pipeline_aws_spark.staging import stage
 
 
 def dsum(col: Column | str, alias: str, scale: int = 6) -> Column:
@@ -825,32 +826,24 @@ def customer_rfm_scores_approx_checked(spark: SparkSession, sf_dir: str) -> Data
     )
 
 
-# Per-part revenue staged once per (application, sf_dir): the Pareto
-# query references it from three shapes (ranked rows, decile cutpoints,
-# decile totals), and without staging each reference re-derives the
-# full lineitem aggregation — the re-derivation trap (BUILDLOG r4).
-_PART_REVENUE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _staged_part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    cache_key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    rev = _PART_REVENUE_CACHE.get(cache_key)
-    if rev is None:
-        li = load_table(spark, "lineitem", sf_dir)
-        rev = (
-            li.groupBy("l_partkey")
-            .agg(
-                F.sum(
-                    (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")))
-                    .cast("decimal(30,4)")
-                ).alias("rev")
-            )
-            .persist()
+    """Per-part revenue staged once per (session, corpus): the Pareto
+    query references it from three shapes (ranked rows, decile
+    cutpoints, decile totals), and without staging each reference
+    re-derives the full lineitem aggregation — the re-derivation trap
+    (BUILDLOG r4)."""
+    return stage(
+        spark, sf_dir, "part_revenue",
+        lambda: load_table(spark, "lineitem", sf_dir)
+        .groupBy("l_partkey")
+        .agg(
+            F.sum(
+                (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")))
+                .cast("decimal(30,4)")
+            ).alias("rev")
         )
-        _PART_REVENUE_CACHE[cache_key] = rev
-    return rev
+        .persist(),
+    )
 
 
 def lineitem_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -38,6 +38,7 @@ from logistream_data_pipeline_aws_spark.operators.dimensions import (
     build_junk_dimension,
 )
 from logistream_data_pipeline_aws_spark.operators.fact import KeyLookup, assemble_fact
+from logistream_data_pipeline_aws_spark.staging import stage
 
 
 # -- dimensions -------------------------------------------------------------
@@ -105,9 +106,9 @@ def _staged_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-pair shuffle and both keygen passes run once instead of once
     per dim build — the same staged-dimension shape the fact pipeline
     uses (a production load lands the hierarchy before the leaf dims)."""
-    return _staged(
+    return stage(
         spark, sf_dir, "hierarchy:part",
-        lambda: _brand_type_hierarchy(load_table(spark, "part", sf_dir)),
+        lambda: _brand_type_hierarchy(load_table(spark, "part", sf_dir)).persist(),
     )
 
 
@@ -277,34 +278,20 @@ def fact_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _assemble_fact_lineitem(spark, sf_dir, lineitem, orders)
 
 
-# Session-scoped staged frames: the ranged keygen trades the
-# single-partition global window for two extra narrow key-column passes
-# (the right trade at scale), but every fact/dim build was re-running
-# those passes for the same (sf_dir, frame).  Stage each slim frame ONCE
-# per Spark application and reuse the persisted plan — at warehouse scale
-# this is exactly "stage the dimension key map", the thing a production
-# deployment does anyway.  Keyed by applicationId so a restarted session
-# never sees another session's (now-invalid) persisted plan.
-_STAGED_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _staged(spark: SparkSession, sf_dir: str, tag: str, build) -> DataFrame:
-    cache_key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), tag)
-    df = _STAGED_CACHE.get(cache_key)
-    if df is None:
-        df = build().persist()
-        _STAGED_CACHE[cache_key] = df
-    return df
-
-
 def _staged_keymap(
     spark: SparkSession, sf_dir: str, table: str, natural_col: str, key_name: str
 ) -> DataFrame:
-    return _staged(
+    """The ranged keygen trades the single-partition global window for
+    two extra narrow key-column passes (the right trade at scale), but
+    every fact/dim build would re-run those passes for the same key map.
+    Stage each slim map once per (session, corpus) and reuse the
+    persisted plan — at warehouse scale this is exactly "stage the
+    dimension key map", the thing a production deployment does anyway."""
+    return stage(
         spark, sf_dir, f"keymap:{table}",
         lambda: with_sequential_key_ranged(
             load_table(spark, table, sf_dir).select(natural_col), key_name, natural_col
-        ),
+        ).persist(),
     )
 
 
@@ -393,8 +380,9 @@ def _assemble_fact_lineitem(
     # (application, sf_dir) instead of re-running its lineitem+orders
     # distinct scan on every fact build (the registered dim_junk_status
     # entry still times the unstaged build)
-    status = _staged(
-        spark, sf_dir, "dim:junk_status", lambda: dim_junk_status(spark, sf_dir)
+    status = stage(
+        spark, sf_dir, "dim:junk_status",
+        lambda: dim_junk_status(spark, sf_dir).persist(),
     )
 
     # J4 analog: differing column names, big-big equi join on the natural key.

@@ -8,6 +8,7 @@ import types
 import pytest
 from pyspark.sql import functions as F
 
+from logistream_data_pipeline_aws_spark import staging
 from logistream_data_pipeline_aws_spark.operators import dedup_family as D
 from logistream_data_pipeline_aws_spark.operators import similarity as S
 from logistream_data_pipeline_aws_spark.operators.multimodal import (
@@ -248,45 +249,37 @@ def test_connected_components_restores_aqe_on_failure(spark, monkeypatch):
     assert spark.conf.get("spark.sql.adaptive.enabled", "true") == before
 
 
-def test_semantic_tag_cache_bounded_and_unpersists(spark):
-    """_SEMANTIC_TAG_CACHE eviction (ADVICE r7 / VERDICT r7 #5): keys
-    from other Spark applications are dropped on the next insert,
-    occupancy is capped LRU-style, and every evicted frame is
-    unpersisted — a session sweeping many (sf_dir, config) pairs cannot
-    pin unbounded executor storage."""
-    from logistream_data_pipeline_aws_spark.plans import extensions as X
+def test_semantic_tag_cache_bounded_and_unpersists(spark, tmp_path):
+    """``staging.stage`` eviction (the bound the semantic-tag LRU used to
+    give, ADVICE r7 / VERDICT r7 #5): an entry of another Spark
+    application is dropped and unpersisted on the next call; a tag holds
+    one source at a time, so a displaced entry is unpersisted; the live
+    frame stays cached — a session sweeping many (sf_dir, config) pairs
+    cannot pin unbounded executor storage."""
+    sizes = iter(range(3, 100))
 
-    saved = dict(X._SEMANTIC_TAG_CACHE)
-    X._SEMANTIC_TAG_CACHE.clear()
-    app = spark.sparkContext.applicationId
-    frames = {}
-
-    def put(key):
-        df = spark.range(3).persist()
+    def frame():
+        df = spark.range(next(sizes)).persist()  # a distinct plan each
         df.count()
-        frames[key] = df
-        X._semantic_tag_cache_put(key, df)
+        return df
 
+    def cached(df):
+        return df.storageLevel.useMemory or df.storageLevel.useDisk
+
+    dead = frame()
+    staging._ENTRIES[("dead-app", "semantic_tag:k=8:iters=2")] = ("/x", (), dead)
     try:
-        # a dead application's entry evicts on the next live-app insert
-        put(("dead-app", "/x", 8, 2))
-        put((app, "/a", 8, 2))
-        assert ("dead-app", "/x", 8, 2) not in X._SEMANTIC_TAG_CACHE
-        assert not frames[("dead-app", "/x", 8, 2)].is_cached
-        # over-cap inserts evict the least recently used, unpersisting it
-        for i in range(X._SEMANTIC_TAG_CACHE_MAX + 1):
-            put((app, f"/sf{i}", 8, 2))
-        assert len(X._SEMANTIC_TAG_CACHE) <= X._SEMANTIC_TAG_CACHE_MAX
-        assert not frames[(app, "/a", 8, 2)].is_cached
-        assert frames[(app, f"/sf{X._SEMANTIC_TAG_CACHE_MAX}", 8, 2)].is_cached
+        a = staging.stage(spark, str(tmp_path / "a"), "semantic_tag:k=8:iters=2", frame)
+        assert ("dead-app", "semantic_tag:k=8:iters=2") not in staging._ENTRIES
+        assert not cached(dead)
+        assert staging.stage(
+            spark, str(tmp_path / "a"), "semantic_tag:k=8:iters=2", frame
+        ) is a
+        b = staging.stage(spark, str(tmp_path / "b"), "semantic_tag:k=8:iters=2", frame)
+        assert not cached(a)
+        assert cached(b)
     finally:
-        for df in X._SEMANTIC_TAG_CACHE.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        X._SEMANTIC_TAG_CACHE.clear()
-        X._SEMANTIC_TAG_CACHE.update(saved)
+        staging.release(spark)
 
 
 def test_embedding_near_duplicates_and_topk(spark):
@@ -760,13 +753,13 @@ def test_abc_pareto_matches_plain_cumsum_and_stays_partitioned(spark):
         if v % 3 == 0:
             rows.append((pk, float(v * 100), 0.0)); pk += 1
     li = spark.createDataFrame(rows, schema)
-    A._PART_REVENUE_CACHE.clear()
+    staging.release(spark)
     try:
         df = _with_table_fixture(spark, li, lambda s: A.lineitem_abc_pareto(s, "unused"))
         out = df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
     finally:
-        A._PART_REVENUE_CACHE.clear()
+        staging.release(spark)
     # reference: plain python cumulative over (rev desc, partkey)
     revs = sorted(((r[1] * (1 - r[2]), r[0]) for r in rows), key=lambda t: (-t[0], t[1]))
     total = sum(v for v, _ in revs)
@@ -800,7 +793,7 @@ def test_graph_hop_distance_layers_and_unreachable(spark):
     )
     tables = {"orders": orders, "lineitem": lineitem}
     orig = C.load_table
-    X._PAGERANK_EDGE_CACHE.clear()
+    staging.release(spark)
     try:
         C.load_table = lambda spark, name, sf_dir: tables[name]  # noqa: ARG005
         X.load_table = C.load_table
@@ -808,7 +801,7 @@ def test_graph_hop_distance_layers_and_unreachable(spark):
     finally:
         C.load_table = orig
         X.load_table = orig
-        X._PAGERANK_EDGE_CACHE.clear()
+        staging.release(spark)
     got = {(r.node_type, r.node_id): r.hops for r in out}
     assert got == {("S", 10): 0, ("C", 1): 1, ("S", 11): 2, ("C", 2): 3}
 
@@ -999,7 +992,7 @@ def _with_graph_tables(spark, edges_cs, fn):
     )
     tables = {"orders": orders, "lineitem": lineitem}
     orig = C.load_table
-    X._PAGERANK_EDGE_CACHE.clear()
+    staging.release(spark)
     try:
         C.load_table = lambda spark, name, sf_dir: tables[name]  # noqa: ARG005
         X.load_table = C.load_table
@@ -1007,7 +1000,7 @@ def _with_graph_tables(spark, edges_cs, fn):
     finally:
         C.load_table = orig
         X.load_table = orig
-        X._PAGERANK_EDGE_CACHE.clear()
+        staging.release(spark)
 
 
 # bipartite chain s10-c1-s11-c2-s12-c3-s13: diameter 6 > the fixed
