@@ -524,36 +524,25 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # changed tail entry fails CI until rotated back into the head.
     return {
     # ==== HEAD WINDOW (the driver records the first ~50) =============
-    # All 50 slots hold the entries whose digests the session staging
-    # registry drifted (logistream_data_pipeline_aws_spark/staging.py
-    # replaced the per-module caches in plans/, the single-slot
-    # signature cache left operators/dedup_family.py, the unused
-    # ranged_keygen option left build_dimension, and the keygen module
-    # docstring was corrected).  See COVERAGE.md "Staging registry
-    # rotation".
+    # 39 slots hold the entries whose digests the fixed-point loop
+    # driver drifted (operators/fixed_point.py took over the lineage
+    # cuts and block release of operators/dedup_family.py,
+    # graph_kcore and supplier_pagerank) together with the
+    # with_sequential_key docstring fix.  See COVERAGE.md "Fixed-point
+    # driver rotation".
     # -- group 0: drifted tail entries, entering the head -------------
-        "doc_bigram_score": X.doc_bigram_score,
-        "corpus_dsir_weights": X.corpus_dsir_weights,
-        "scd2_daily_snapshot": X.scd2_daily_snapshot,
-        "warehouse_orc_readback": X.warehouse_orc_readback,
+        "dim_junk_status": W.dim_junk_status,
+        "dim_region": W.dim_region,
+        "dim_geography": W.dim_geography,
+    # -- group 1: drifted entries already in the head ----------------
         "orders_zorder_clustering": X.orders_zorder_clustering,
-        "scd2_user_state": X.scd2_user_state,
         "supplier_pagerank": X.supplier_pagerank,
         "fact_date_slice": X.fact_date_slice,
-        "dim_customer": W.dim_customer,
-        "bm25_topk": X.bm25_topk,
         "dim_product": W.dim_product,
         "dim_product_type": W.dim_product_type,
         "dim_brand": W.dim_brand,
         "fact_lineitem": W.fact_lineitem,
         "fact_lineitem_bucketed": W.fact_lineitem_bucketed,
-        "fact_write_readback": X.fact_write_readback,
-        "events_upsert_delete": X.events_upsert_delete,
-        "events_upsert_changes": X.events_upsert_changes,
-        "events_upsert_timetravel": X.events_upsert_timetravel,
-        "lineitem_abc_pareto_approx": A.lineitem_abc_pareto_approx,
-        "graph_hop_distance": X.graph_hop_distance,
-    # -- group 1: drifted entries already in the head ----------------
         "dedup_minhash_staged": X.dedup_minhash_staged,
         "doc_bigram_score_staged": X.doc_bigram_score_staged,
         "corpus_dsir_weights_staged": X.corpus_dsir_weights_staged,
@@ -564,7 +553,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_dedup_pipeline": X.corpus_dedup_pipeline,
         "graph_kcore": X.graph_kcore,
         "corpus_gopher_rules": X.corpus_gopher_rules,
-        "lineitem_abc_pareto": A.lineitem_abc_pareto,
         "dedup_semantic": X.dedup_semantic_k8,
         "dedup_exact": X.dedup_exact,
         "dedup_survivors": X.dedup_survivors,
@@ -583,11 +571,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_incremental_ingest": X.dedup_incremental_ingest,
         "dedup_embedding": X.dedup_embedding,
         "dedup_minhash_lsh": X.dedup_minhash_lsh,
+    # -- group 2: unchanged since the staging rotation's green rows ---
+        "doc_bigram_score": X.doc_bigram_score,
+        "corpus_dsir_weights": X.corpus_dsir_weights,
+        "scd2_daily_snapshot": X.scd2_daily_snapshot,
+        "warehouse_orc_readback": X.warehouse_orc_readback,
+        "scd2_user_state": X.scd2_user_state,
+        "dim_customer": W.dim_customer,
+        "bm25_topk": X.bm25_topk,
+        "fact_write_readback": X.fact_write_readback,
+        "events_upsert_delete": X.events_upsert_delete,
+        "events_upsert_changes": X.events_upsert_changes,
+        "events_upsert_timetravel": X.events_upsert_timetravel,
     # ===== ~50-entry driver window boundary.  Everything below is
     #    tail: digest-pinned since its green row
-    #    (tests/test_rotation_ledger.py), stalest first; the 21
-    #    unchanged entries the staging rotation displaced from the head
-    #    close the tail.  The two sketch-only prod twins and
+    #    (tests/test_rotation_ledger.py), stalest first; the unchanged
+    #    entries the staging and fixed-point rotations displaced from
+    #    the head close the tail.  The two sketch-only prod twins and
     #    sql_profit_by_hierarchy stay deregistered (bench.py +
     #    tests/test_prod_twins.py pins).
     # ==================================================================
@@ -620,7 +620,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "a8_returns_by_nation": A.a8_returns_by_nation,
         "corpus_mixture_sample": X.corpus_mixture_sample,
         "dim_date": W.dim_date,
-        "dim_junk_status": W.dim_junk_status,
         "embedding_quantize": X.embedding_quantize,
         "events_asof_last_purchase": X.events_asof_last_purchase,
         "events_hourly": A.events_hourly,
@@ -634,8 +633,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "routes_csv_readback": X.routes_csv_readback,
         "sequence_packing": X.sequence_packing,
         "user_sessions": X.user_sessions,
-        "dim_region": W.dim_region,
-        "dim_geography": W.dim_geography,
         "sql_cheapest_supplier": V.sql_cheapest_supplier,
         "sql_excess_suppliers": V.sql_excess_suppliers,
         "sql_forecast_revenue": V.sql_forecast_revenue,
@@ -735,6 +732,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "segment_region_pivot": A.segment_region_pivot,
         "sql_shipping_priority": V.sql_shipping_priority,
         "similarity_ivf_incremental": X.similarity_ivf_incremental,
+    # -- displaced from the head by the fixed-point rotation (unchanged)
+        "lineitem_abc_pareto_approx": A.lineitem_abc_pareto_approx,
+        "graph_hop_distance": X.graph_hop_distance,
+        "lineitem_abc_pareto": A.lineitem_abc_pareto,
     }
 
 

@@ -11,12 +11,11 @@ Three strategies, chosen by table size:
 - ``with_sequential_key`` — the ``row_number() OVER (ORDER BY natural
   key)`` keys (exact 1..N contiguity matching IDENTITY semantics, fully
   deterministic), computed as a triangular broadcast self-join over the
-  *deduplicated dimension*, not a window: O(d²) comparisons, meant for
-  tiny dims.  Its own docstring says entity-sized dims use the ranged
-  form, but the reference pipeline's ``dim_customer`` / ``dim_product``
-  use this join too: a traced warehouse load's ``dim_customer`` write
-  went 1.35 s -> 7.44 s for 1000 -> 4000 customers (the open ``FOUND:``
-  item in CHANGES.md).
+  *deduplicated dimension*, not a window: O(d²) comparisons.  The
+  reference pipeline keys every dim with it, entity-sized
+  ``dim_customer`` / ``dim_product`` included: a traced warehouse load's
+  ``dim_customer`` write went 1.35 s -> 7.44 s for 1000 -> 4000
+  customers (the open ``FOUND:`` item in CHANGES.md).
 - ``with_sequential_key_ranged`` — the same keys over one numeric natural
   key, decomposed into range buckets so no plan node is unpartitioned
   and the cost stays linear; the TPC-H key maps use it.
@@ -41,12 +40,13 @@ from pyspark.sql import functions as F
 def with_sequential_key(
     df: DataFrame, key_name: str, order_by: Sequence[str]
 ) -> DataFrame:
-    """Add a deterministic 1..N surrogate key (IDENTITY parity, TINY dims
-    only: flag/junk/geo dims whose cardinality is bounded by the domain,
-    not the data — entity-sized dims use ``with_sequential_key_ranged``).
+    """Add a deterministic 1..N surrogate key (IDENTITY parity).  Every
+    reference-pipeline dim uses it, entity-sized ``dim_customer`` /
+    ``dim_product`` included; only the TPC-H key maps use
+    ``with_sequential_key_ranged``.
 
     key = 1 + count of rows with lexicographically smaller natural key — a
-    triangular broadcast self-join over the (deduplicated, tiny) dim
+    triangular broadcast self-join over the deduplicated dim
     instead of an empty-partition global window, so no stage ever funnels
     through one task and the bench log stays free of single-partition
     ``WindowExec`` warnings.  O(d²) comparisons; fine for d ≤ ~10⁴.

@@ -34,6 +34,7 @@ from logistream_data_pipeline_aws_spark.functions.text import (
     word_shingles,
 )
 from logistream_data_pipeline_aws_spark.functions.vectors import cosine
+from logistream_data_pipeline_aws_spark.operators.fixed_point import iterate, release
 
 
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -974,64 +975,6 @@ def prefix_filter_pairs(
     )
 
 
-def _persistent_rdd_ids(spark) -> set[int]:
-    """Ids of every RDD currently holding storage blocks (JVM-side truth —
-    the Python CacheManager view does NOT include the internal RDD a
-    localCheckpoint materializes)."""
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in jmap.keySet().toArray()}
-    except Exception:  # connect mode / no JVM gateway: degrade to
-        return set()   # reference-drop + ContextCleaner release
-
-
-def _own_checkpoint_rdd_ids(df: DataFrame) -> set[int]:
-    """The RDD ids belonging to THIS checkpointed frame and nothing else.
-
-    A checkpointed Dataset's analyzed plan is a single ``LogicalRDD`` node
-    wrapping the lineage-cut RDD; that rdd plus its internal checkpointRDD
-    (via ``RDDCheckpointData`` — ``private[spark]`` compiles to public
-    bytecode, so py4j can call it) are the only RDDs the cut can have
-    persisted.  A global before/after diff of ``getPersistentRDDs`` would
-    also capture RDDs a CONCURRENT job persisted during the eager
-    checkpoint (a streaming micro-batch, a parallel query thread) — and
-    force-unpersisting a stranger's lineage-truncated localCheckpoint RDD
-    is unrecoverable for that job (ADVICE r9 #1)."""
-    ids: set[int] = set()
-    try:
-        node = df._jdf.queryExecution().analyzed()
-        if node.getClass().getSimpleName() == "LogicalRDD":
-            r = node.rdd()
-            ids.add(int(r.id()))
-            cpd = r.checkpointData()
-            if cpd.isDefined():
-                opt = cpd.get().checkpointRDD()
-                if opt.isDefined():
-                    ids.add(int(opt.get().id()))
-    except Exception:
-        pass  # connect mode / plan shape change: release nothing (safe)
-    return ids
-
-
-def _release_rdds(spark, ids: set[int]) -> None:
-    """Free storage blocks DIRECTLY at the RDD level.
-
-    ``DataFrame.unpersist`` on a localCheckpoint-ed frame only clears
-    CacheManager entries and never touches the checkpointed RDD's blocks
-    (verified empirically: ``getRDDStorageInfo`` still lists the RDD after
-    ``unpersist(blocking=True)``), so a frame-level call leaves release to
-    JVM GC + ContextCleaner."""
-    if not ids:
-        return
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for e in jmap.entrySet().toArray():
-            if int(e.getKey()) in ids:
-                e.getValue().unpersist(False)
-    except Exception:
-        pass  # best-effort: blocks then die with GC as before
-
-
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
@@ -1064,22 +1007,11 @@ def connected_components(
     rounds made those hang — ``dedup_semantic`` found this at bench
     scale.  Converged when no label changes.
 
-    Each round ends in an EAGER lineage truncation (reliable
-    ``checkpoint`` when the session has a checkpoint dir, else
-    ``localCheckpoint``): without it the label frame's plan nests one
-    level per round and driver-side analysis cost doubles per round —
-    the classic iterative-algorithm failure mode on Spark.  The
-    superseded round's storage blocks are released at the RDD level
-    (the checkpoint's own ``LogicalRDD`` rdd id + its internal
-    checkpointRDD id, then JVM-side ``unpersist`` on exactly those ids —
-    frame-level ``unpersist`` never
-    touches a localCheckpoint's blocks), so a long-lived session holds
-    at most one round's label blocks, not one per round; with a
-    reliable checkpoint dir, set ``spark.cleaner.referenceTracking
-    .cleanCheckpoints=true`` on the cluster so the released frames'
-    checkpoint FILES are reaped too.  Per round: two joins + one
-    aggregation, all keyed on node id; data stays distributed, the
-    driver sees only a change count.
+    The loop runs on ``operators.fixed_point.iterate``: each round ends
+    in an eager lineage cut, and the superseded round's blocks are freed
+    at the RDD level, so a long-lived session holds at most one round's
+    label blocks.  Per round: two joins + one aggregation, all keyed on
+    node id; data stays distributed, the driver sees only a change count.
     """
     # persist the symmetric edge list: ``edges`` is usually the OUTPUT of
     # candidate mining (minhash -> banded join -> exact verify), and
@@ -1091,24 +1023,6 @@ def connected_components(
         .distinct()
         .persist()
     )
-    spark = nodes.sparkSession
-
-    def _truncate(df: DataFrame) -> tuple[DataFrame, set[int]]:
-        # eager cut of the per-round plan lineage; reliable checkpoint
-        # when configured (fault-tolerant — cluster use), local blocks
-        # otherwise (single-node / test use).  Returns the frame plus
-        # the ids of the persistent RDDs the cut created — scoped to the
-        # checkpoint's OWN LogicalRDD (never a global diff, which would
-        # sweep up RDDs a concurrent job persisted mid-checkpoint), so
-        # the caller can release the superseded round's blocks
-        # deterministically (a reliable checkpoint stores to the
-        # checkpoint dir, persists no RDD, and yields an empty id set).
-        if spark.sparkContext.getCheckpointDir() is not None:
-            out = df.checkpoint(eager=True)
-        else:
-            out = df.localCheckpoint(eager=True)
-        return out, _own_checkpoint_rdd_ids(out) & _persistent_rdd_ids(spark)
-
     # iterate over EDGE-ENDPOINT nodes only: a node with no near-dup
     # edge keeps label = id forever, so carrying the whole corpus through
     # every round is pure waste — in the realistic regime (duplicates are
@@ -1123,15 +1037,14 @@ def connected_components(
         # regardless of data size: measured 10.1 s for a 323-edge graph
         # at sf0.1, while a collected union-find labels it in
         # milliseconds.  The collect is BOUNDED by the gate (<= 100k
-        # symmetric edge rows, a few MB — the same tiny-graph threshold
-        # the AQE bypass below uses); at corpus scale the gate keeps CC
+        # symmetric edge rows, a few MB); at corpus scale the gate keeps CC
         # on the O(log d) loop, so nothing data-sized ever crosses to
         # the driver.  Labels are identical by construction:
         # union-by-minimum-root + find-to-root yields the minimum
         # reachable id — exactly the loop's fixpoint and the DuckDB
         # oracle's recursive min-reach.  Pass ``driver_path_max_edges=0``
         # or ``None`` to force the distributed loop — the loop-behavior
-        # tests (convergence guard, AQE restore, block release) do.
+        # tests (convergence guard, block release) do.
         from pyspark.sql import types as T
 
         pair_rows = sym.collect()
@@ -1173,97 +1086,65 @@ def connected_components(
             F.col("id"),
             F.coalesce(F.col("label"), F.col("id")).alias("cluster_id"),
         )
-    labels = (
+    seed = (
         sym.select(F.col("src").alias("id"))
         .distinct()
         .select(F.col("id"), F.col("id").alias("label"))
         .persist()
     )
-    # tiny-graph fast path: below ~100k symmetric edges every per-round
-    # frame is trivially small, and AQE's per-exchange stage
-    # materialization costs more wall-clock than it saves — run the loop
-    # non-adaptive and restore the setting after.  At real scale AQE
-    # stays on (skew splits, runtime coalescing).
-    spark_conf = spark.conf
-    aqe_restore: str | None = None
-    if n_sym < 100_000:
-        aqe_restore = spark_conf.get("spark.sql.adaptive.enabled", "true")
-        spark_conf.set("spark.sql.adaptive.enabled", "false")
-    converged = False
-    prev_ckpt: DataFrame | None = None  # last round's checkpointed frame
-    prev_ids: set[int] = set()  # its persistent RDD ids (JVM-side)
-    try:
-        for _ in range(max_iters):
-            neighbor_min = (
-                sym.join(labels, sym.dst == labels.id)
-                .groupBy("src")
-                .agg(F.min("label").alias("nbr_label"))
+
+    def _round(state: DataFrame) -> DataFrame:
+        prev = state.select("id", "label")
+        neighbor_min = (
+            sym.join(prev, sym.dst == prev.id)
+            .groupBy("src")
+            .agg(F.min("label").alias("nbr_label"))
+        )
+        # hook: adopt the neighborhood minimum; carry the pre-round
+        # label so the convergence check is a filter over the cut
+        # frame, not an extra join against the previous round
+        cur = prev.join(
+            neighbor_min, prev.id == neighbor_min.src, "left"
+        ).select(
+            "id",
+            F.least(
+                F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
+            ).alias("label"),
+            F.col("label").alias("_prev"),
+        )
+        # pointer doubling, twice per round: follow the current label
+        # one hop (labels are always ids INSIDE the component, so
+        # label-of-label is a valid, possibly much smaller,
+        # in-component bound).  Two jumps shrink the hop distance ~4x
+        # per round — the per-round cost is one extra tiny self-join,
+        # and every round saved is a full Spark job round-trip.
+        for hop_i in range(2):
+            hop = cur.select(
+                F.col("id").alias(f"_h{hop_i}"),
+                F.col("label").alias(f"_hl{hop_i}"),
             )
-            # hook: adopt the neighborhood minimum; carry the pre-round
-            # label so the convergence check is a filter over the
-            # CHECKPOINTED frame, not an extra join against the previous
-            # round
-            cur = labels.join(
-                neighbor_min, labels.id == neighbor_min.src, "left"
+            cur = cur.join(
+                hop, cur.label == F.col(f"_h{hop_i}"), "left"
             ).select(
                 "id",
                 F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
+                    F.col("label"),
+                    F.coalesce(F.col(f"_hl{hop_i}"), F.col("label")),
                 ).alias("label"),
-                F.col("label").alias("_prev"),
+                "_prev",
             )
-            # pointer doubling, twice per round: follow the current label
-            # one hop (labels are always ids INSIDE the component, so
-            # label-of-label is a valid, possibly much smaller,
-            # in-component bound).  Two jumps shrink the hop distance ~4x
-            # per round — the per-round cost is one extra tiny self-join,
-            # and every round saved is a full Spark job round-trip.
-            for hop_i in range(2):
-                hop = cur.select(
-                    F.col("id").alias(f"_h{hop_i}"),
-                    F.col("label").alias(f"_hl{hop_i}"),
-                )
-                cur = cur.join(
-                    hop, cur.label == F.col(f"_h{hop_i}"), "left"
-                ).select(
-                    "id",
-                    F.least(
-                        F.col("label"),
-                        F.coalesce(F.col(f"_hl{hop_i}"), F.col("label")),
-                    ).alias("label"),
-                    "_prev",
-                )
-            new_labels, new_ids = _truncate(cur)
-            changed = new_labels.where(
-                F.col("label") != F.col("_prev")
-            ).count()
-            # free the superseded round's blocks DIRECTLY at the RDD
-            # level: the round-(r-1) checkpoint's blocks are dead the
-            # moment round r materializes, and neither unpersisting the
-            # derived `labels` select nor frame-level
-            # prev_ckpt.unpersist() releases a localCheckpoint's RDD —
-            # without the id-level release a long CC run accumulates
-            # one round's blocks per iteration until GC notices
-            labels.unpersist()
-            if prev_ckpt is not None:
-                prev_ckpt.unpersist()
-            _release_rdds(spark, prev_ids)
-            prev_ckpt, prev_ids = new_labels, new_ids
-            labels = new_labels.select("id", "label")
-            if changed == 0:
-                converged = True
-                break
+        return cur
+
+    def _unchanged(_prev: DataFrame, cur: DataFrame) -> bool:
+        return cur.where(F.col("label") != F.col("_prev")).count() == 0
+
+    try:
+        labels, converged = iterate(seed, _round, max_iters, done=_unchanged)
     finally:
-        # restore on EVERY exit path: a Spark failure inside the loop
-        # must not leave the session permanently non-adaptive
-        if aqe_restore is not None:
-            spark_conf.set("spark.sql.adaptive.enabled", aqe_restore)
+        seed.unpersist()
         sym.unpersist()
     if not converged:
-        labels.unpersist()
-        if prev_ckpt is not None:
-            prev_ckpt.unpersist()
-        _release_rdds(spark, prev_ids)
+        release(labels)
         raise RuntimeError(
             f"connected_components did not converge within {max_iters} "
             "iterations (component diameter exceeds max_iters); raise "

@@ -25,6 +25,7 @@ from logistream_data_pipeline_aws_spark.functions.text import (
 )
 from logistream_data_pipeline_aws_spark.operators import dedup_family as D
 from logistream_data_pipeline_aws_spark.operators import similarity as S
+from logistream_data_pipeline_aws_spark.operators.fixed_point import iterate
 from logistream_data_pipeline_aws_spark.staging import release, stage
 
 
@@ -2485,46 +2486,51 @@ def supplier_pagerank(spark: SparkSession, sf_dir: str, iters: int = 2) -> DataF
     exchanges).  Per round the cached edges shuffle once on the uniform
     join key (customer then supplier), degrees broadcast-join back, and
     score vectors are one row per node.  A fixed 2-round unroll needs no
-    checkpointing; production-depth iteration would also persist each
-    score vector per round (the connected_components discipline)."""
+    lineage cut; ``supplier_pagerank_converged`` runs the same push step
+    to a fixed point with one."""
     edges = _staged_cust_supp_edges(spark, sf_dir)
     deg_c = edges.groupBy("c").agg(F.count(F.lit(1)).alias("deg_c"))
     deg_s = edges.groupBy("s").agg(F.count(F.lit(1)).alias("deg_s"))
     r_c = deg_c.select("c", F.lit(1.0).alias("r"))
     r_s = deg_s.select("s", F.lit(1.0).alias("r"))
-
-    def push(scores: DataFrame, deg: DataFrame, from_col: str, to_col: str) -> DataFrame:
-        contrib = (
-            edges.join(scores, from_col)
-            .join(deg, from_col)
-            .select(
-                F.col(to_col),
-                (F.col("r") / F.col(f"deg_{from_col}")).cast("decimal(38,18)").alias("_w"),
-            )
-        )
-        return contrib.groupBy(to_col).agg(
-            (F.lit(0.15) + F.lit(0.85) * F.sum("_w").cast("double")).alias("r")
-        )
-
     for _ in range(iters):
-        r_s_new = push(r_c, deg_c, "c", "s")
-        r_c_new = push(r_s, deg_s, "s", "c")
-        r_c, r_s = r_c_new, r_s_new
-
-    return (
-        r_c.select(
-            F.lit("C").alias("node_type"),
-            F.col("c").alias("node_id"),
-            F.round("r", 6).alias("score"),
+        r_c, r_s = (
+            _pagerank_push(edges, r_s, deg_s, "s", "c"),
+            _pagerank_push(edges, r_c, deg_c, "c", "s"),
         )
-        .unionByName(
-            r_s.select(
-                F.lit("S").alias("node_type"),
-                F.col("s").alias("node_id"),
-                F.round("r", 6).alias("score"),
-            )
+    return _pagerank_scores(_tag_sides(r_c, r_s))
+
+
+def _pagerank_push(
+    edges: DataFrame, scores: DataFrame, deg: DataFrame, from_col: str, to_col: str
+) -> DataFrame:
+    """One synchronous PageRank half-round: push every ``from_col`` node's
+    score r/deg over ``edges`` onto the ``to_col`` side."""
+    contrib = (
+        edges.join(scores, from_col)
+        .join(deg, from_col)
+        .select(
+            F.col(to_col),
+            (F.col("r") / F.col(f"deg_{from_col}")).cast("decimal(38,18)").alias("_w"),
         )
     )
+    return contrib.groupBy(to_col).agg(
+        (F.lit(0.15) + F.lit(0.85) * F.sum("_w").cast("double")).alias("r")
+    )
+
+
+def _tag_sides(r_c: DataFrame, r_s: DataFrame) -> DataFrame:
+    """Customer and supplier score vectors as one ``(node_type, node_id,
+    r)`` frame."""
+    return r_c.select(
+        F.lit("C").alias("node_type"), F.col("c").alias("node_id"), "r"
+    ).unionByName(
+        r_s.select(F.lit("S").alias("node_type"), F.col("s").alias("node_id"), "r")
+    )
+
+
+def _pagerank_scores(r: DataFrame) -> DataFrame:
+    return r.select("node_type", "node_id", F.round("r", 6).alias("score"))
 
 
 def graph_hop_distance_converged(
@@ -2610,76 +2616,57 @@ def supplier_pagerank_converged(
     ``tol`` (or ``max_iters`` as the runaway bound).  The per-round
     delta is one max-aggregate over the joined old/new score vectors —
     a scalar action per iteration, the standard driver-loop shape for
-    fixed-point algorithms.  Score vectors are EAGERLY localCheckpointed
-    per round — materialized AND lineage-truncated, so the per-round plan
-    stays constant-size at any iteration count (nested persist-only
-    plans OOMed driver analysis around 30 rounds).  The fixed 2-round
-    ``supplier_pagerank`` stays the oracle entry (exactly replayable as
-    unrolled SQL); this is the variant to run to an actual fixed
-    point."""
+    fixed-point algorithms.  Both score vectors ride one ``(node_type,
+    node_id, r)`` frame that ``fixed_point.iterate`` cuts every round, so
+    the per-round plan stays constant-size at any iteration count
+    (nested persist-only plans OOMed driver analysis around 30 rounds)
+    and only the final round's blocks outlive the call.  The fixed
+    2-round ``supplier_pagerank`` stays the oracle entry (exactly
+    replayable as unrolled SQL); this is the variant to run to an
+    actual fixed point."""
     edges = _staged_cust_supp_edges(spark, sf_dir)
     deg_c = edges.groupBy("c").agg(F.count(F.lit(1)).alias("deg_c")).persist()
     deg_s = edges.groupBy("s").agg(F.count(F.lit(1)).alias("deg_s")).persist()
-    r_c = deg_c.select("c", F.lit(1.0).alias("r")).localCheckpoint(eager=True)
-    r_s = deg_s.select("s", F.lit(1.0).alias("r")).localCheckpoint(eager=True)
 
-    def push(scores: DataFrame, deg: DataFrame, from_col: str, to_col: str) -> DataFrame:
-        contrib = (
-            edges.join(scores, from_col)
-            .join(deg, from_col)
-            .select(
-                F.col(to_col),
-                (F.col("r") / F.col(f"deg_{from_col}")).cast("decimal(38,18)").alias("_w"),
+    def _round(r: DataFrame) -> DataFrame:
+        def side(t: str, key: str) -> DataFrame:
+            return r.where(F.col("node_type") == t).select(
+                F.col("node_id").alias(key), "r"
             )
-        )
-        return contrib.groupBy(to_col).agg(
-            (F.lit(0.15) + F.lit(0.85) * F.sum("_w").cast("double")).alias("r")
+
+        return _tag_sides(
+            _pagerank_push(edges, side("S", "s"), deg_s, "s", "c"),
+            _pagerank_push(edges, side("C", "c"), deg_c, "c", "s"),
         )
 
-    def max_delta(new: DataFrame, old: DataFrame, key: str) -> float:
+    def _settled(old: DataFrame, new: DataFrame) -> bool:
         d = (
             new.withColumnRenamed("r", "r_new")
-            .join(old.withColumnRenamed("r", "r_old"), key, "full")
+            .join(old.withColumnRenamed("r", "r_old"), ["node_type", "node_id"], "full")
             .agg(
                 F.max(
                     F.abs(F.coalesce("r_new", F.lit(0.0)) - F.coalesce("r_old", F.lit(0.0)))
-                ).alias("d")
+                )
             )
-            .first()["d"]
+            .first()[0]
         )
-        return 0.0 if d is None else float(d)
+        return d is None or d < tol
 
-    for _ in range(max_iters):
-        r_s_new = push(r_c, deg_c, "c", "s").localCheckpoint(eager=True)
-        r_c_new = push(r_s, deg_s, "s", "c").localCheckpoint(eager=True)
-        delta = max(max_delta(r_s_new, r_s, "s"), max_delta(r_c_new, r_c, "c"))
-        # rebinding drops the last Python reference to the superseded
-        # checkpointed score vectors — the ContextCleaner reclaims their
-        # blocks, so a long fixed-point run holds two vectors, not
-        # O(iterations) of them (r5 ADVICE)
-        r_c, r_s = r_c_new, r_s_new
-        if delta < tol:
-            break
-    # the returned plan reads only the checkpointed final vectors
-    # (lineage truncated), so the degree tables can be released now
-    # instead of leaking in the long-running driver this variant
-    # exists for (r5 ADVICE)
-    deg_c.unpersist()
-    deg_s.unpersist()
-    return (
-        r_c.select(
-            F.lit("C").alias("node_type"),
-            F.col("c").alias("node_id"),
-            F.round("r", 6).alias("score"),
+    try:
+        r, _ = iterate(
+            _tag_sides(
+                deg_c.select("c", F.lit(1.0).alias("r")),
+                deg_s.select("s", F.lit(1.0).alias("r")),
+            ),
+            _round,
+            max_iters,
+            done=_settled,
         )
-        .unionByName(
-            r_s.select(
-                F.lit("S").alias("node_type"),
-                F.col("s").alias("node_id"),
-                F.round("r", 6).alias("score"),
-            )
-        )
-    )
+    finally:
+        # the result reads only the final cut, so the degree tables go
+        deg_c.unpersist()
+        deg_s.unpersist()
+    return _pagerank_scores(r)
 
 
 # -- snapshot CDC diff + multi-dimensional layout ---------------------------
@@ -8084,100 +8071,20 @@ def _copurchase_undirected(
     return edges, und
 
 
-def graph_kcore(
-    spark: SparkSession,
-    sf_dir: str,
-    rounds: int = 20,
-    max_order_items: int | None = 256,
-    checkpoint_every: int = 2,
-) -> DataFrame:
-    """K-core decomposition (coreness per node) over the part
-    co-purchase graph — the graph family's fourth leg next to
-    ``supplier_pagerank`` (centrality), ``connected_components``
-    (reachability) and ``graph_triangle_count`` (local density).  The
-    coreness of a node is the largest k such that it survives k-core
-    peeling; it is the standard dense-community / influential-spreader
-    signal and the degeneracy ordering behind many graph algorithms.
+# above this many vertices the per-round c frame is not broadcast (~32
+# B/row, so ~128 MB) and AQE plans the join exactly as before hints
+_KCORE_BROADCAST_MAX_NODES = 4_000_000
 
-    THE SCALE TRICK IS THE H-INDEX FIXPOINT (Lu et al. 2016, "The
-    H-index of a network node and its relation to degree and
-    coreness"): initialize c0(v) = degree(v) and iterate
-    c_{t+1}(v) = H({c_t(u) : u in N(v)}) — the h-index of the
-    neighbors' current values.  The sequence is monotone
-    non-increasing and converges EXACTLY to the coreness, replacing
-    the sequential peel-one-vertex-at-a-time algorithm with a
-    per-round bulk update every node computes independently — the
-    message-passing shape Spark executes well.  H over a neighbor
-    group is relational: rank neighbor values descending within the
-    node's partition and take MAX(LEAST(rank, value)) — tie order
-    among equal values cannot change an h-index, so the window is
-    cross-engine deterministic without a composite tie-break.
 
-    Like ``supplier_pagerank`` (iters=2), the REGISTERED form runs a
-    FIXED number of rounds so the DuckDB oracle replays it as an
-    unrolled CTE chain; ``graph_kcore_converged`` iterates to the true
-    fixpoint (the monotone total Σc is unchanged iff no node moved —
-    one scalar per round on the driver), and the pinned test asserts
-    the fixed-round form equals it on the oracle-gate corpora
-    (sf0.001 and sf0.01 converge within 20 rounds — measured 10 and
-    ~17-20 respectively), so registered rows are exact corenesses
-    there, not approximations.  Denser corpora need more rounds
-    (sf0.1 is not yet converged at 20); production uses the
-    converged twin, whose per-round cost is identical.
-
-    The output carries a ``converged`` flag (VERDICT r10 #4: the
-    convergence CLAIM needs a hard signal, not just a pytest pin):
-    after the fixed rounds, ONE extra probe round is evaluated and
-    ``converged`` is true iff the monotone total Σc would not move —
-    i.e. the returned corenesses ARE the fixpoint.  It rides every row
-    (a broadcast of a 1-row cross join), so the driver's value hash
-    fails the round a corpus stops converging within ``rounds`` — a
-    convergence regression can no longer hide behind unchanged
-    corenesses on the converged subset.  The oracle replays it as one
-    more unrolled round compared by total.
-
-    Scale shape: per round, one equi-join (neighbor values onto the
-    edge view), one NODE-PARTITIONED window (never global), one
-    aggregate, one vertex-sized min-combine — all keyed on node id;
-    the per-order item cap bounds edge generation exactly as in the
-    triangle census.  ``checkpoint_every`` sets the lineage-truncation
-    cadence (VERDICT r12 #8's A/B knob): every N rounds the plan is
-    cut; in between it grows by the _step doubling, so N=2 means at
-    most one un-truncated doubling — bounded — and halves the
-    per-round materialization count.  The knob is PHYSICAL only
-    (values identical at any cadence, pinned by
-    ``test_graph_kcore_checkpoint_cadence_is_value_neutral``); the
-    sf0.1 A/B (3 reps each, warm scan): every-round 29.8-30.7 s,
-    every-2 24.0-26.4 s (-19%, ADOPTED as the default), every-4
-    39-41 s (the un-truncated plan doubling re-derives two rounds per
-    materialization and loses more than the skipped materializations
-    save) — recorded in the r13 bench provenance.  Each cadence
-    period ends in an eager lineage truncation
-    with scoped RDD-level block release (the ``connected_components``
-    discipline) — a plain persist leaves the LOGICAL plan doubling
-    per round (the frame references the previous round twice) and
-    driver-side analysis OOMs by round 8, caught live while building
-    this operator.
-
-    Output: ``(part, degree, coreness, converged)`` — ``converged`` is
-    the fixpoint flag riding every row (one extra probe round; a
-    convergence regression fails the driver's value hash).
-
-    Round-11 oracle: ``__spark_entry__._kcore_oracle_sql`` (imported by
-    the pinned test in tests/test_extensions.py) — the same
-    cap/edge/degree CTEs and the unrolled h-index rounds, replayed with
-    one more round and compared by total for the converged flag."""
+def _kcore_parts(spark: SparkSession, sf_dir: str, max_order_items: int | None):
+    """What ``graph_kcore`` and ``graph_kcore_converged`` share: returns
+    ``(c0, und, step, coreness)`` — the initial value frame ``(v, c)``
+    (c = degree), the cached edge view (the caller unpersists it), the
+    h-index round ``step(c) -> c`` and ``coreness(c)``, the
+    ``(part, degree, coreness)`` output for a value frame."""
     from pyspark.sql.window import Window
 
-    if checkpoint_every < 1:
-        # 0 would ZeroDivisionError on the cadence modulo below; a
-        # negative value would never match it and silently disable
-        # lineage truncation — reintroducing the unbounded plan
-        # doubling the checkpointing exists to prevent (ADVICE r13)
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}"
-        )
-    edges, und = _copurchase_undirected(spark, sf_dir, max_order_items)
+    _edges, und = _copurchase_undirected(spark, sf_dir, max_order_items)
     deg = (
         und.groupBy("v")
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
@@ -8213,29 +8120,22 @@ def graph_kcore(
         .repartition(F.col("v"))
         .persist()
     )
-    cur = deg.select("v", F.col("degree").alias("c"))
-    prev_ids: set[int] = set()
     # non-self rows rank exactly as before (self sorts LAST per node, so
     # neighbor ranks are unchanged); tie order among equal cu cannot
     # change an h-index (the r11 determinism argument)
     w = Window.partitionBy("v").orderBy("_self", F.desc("cu"))
     # explicit broadcast of the vertex-sized c frame (r14, guide §3.1):
-    # every round's c-frame is a localCheckpoint LogicalRDD with NO size
-    # statistics, so the static planner can't broadcast it and AQE only
-    # recovers the strategy after materializing both sides as shuffle
-    # stages.  SIZE-GATED: above ``lsdp.graph.kcore.broadcastMaxNodes``
-    # vertices (~32 B/row => the default 4M is a ~128 MB relation) the
-    # hint is withheld and planning is left to AQE exactly as before —
+    # every round's c-frame is a cut LogicalRDD with NO size statistics,
+    # so the static planner can't broadcast it and AQE only recovers the
+    # strategy after materializing both sides as shuffle stages.
+    # SIZE-GATED: above _KCORE_BROADCAST_MAX_NODES the hint is withheld —
     # the 1000x probe graph (18.75M nodes) takes that path.
     n_nodes = deg.count()
-    bcast_max = int(
-        spark.conf.get("lsdp.graph.kcore.broadcastMaxNodes", "4000000")
-    )
 
     def _vertex_hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if n_nodes <= bcast_max else df
+        return F.broadcast(df) if n_nodes <= _KCORE_BROADCAST_MAX_NODES else df
 
-    def _step(c_frame: DataFrame) -> DataFrame:
+    def step(c_frame: DataFrame) -> DataFrame:
         nb = und.join(
             _vertex_hint(
                 c_frame.select(F.col("v").alias("u"), F.col("c").alias("cu"))
@@ -8262,38 +8162,102 @@ def graph_kcore(
             )
         )
 
-    try:
-        for rnd in range(rounds):
-            nxt = _step(cur)
-            # truncate on the cadence AND at the last round (the
-            # convergence probe + final join below re-reference cur)
-            if (rnd + 1) % checkpoint_every == 0 or rnd == rounds - 1:
-                nxt = nxt.localCheckpoint(eager=True)
-                ids = (
-                    D._own_checkpoint_rdd_ids(nxt)
-                    & D._persistent_rdd_ids(spark)
-                )
-                D._release_rdds(spark, prev_ids)
-                prev_ids = ids
-            cur = nxt
-        # convergence probe (VERDICT r10 #4): one extra round, compared
-        # by the monotone total — evaluated HERE while und is persisted
-        # (two vertex-sized scalar aggregates, the converged twin's
-        # per-round cost paid once)
-        t0 = cur.agg(F.sum("c")).collect()[0][0]
-        t1 = _step(cur).agg(F.sum("c")).collect()[0][0]
-        # the final degree join is vertex-sized on both sides (two
-        # stat-less LogicalRDDs — static planner would sort-merge):
-        # same size-gated hint as the per-round c frame
-        return (
-            deg.join(_vertex_hint(cur), "v")
-            .select(
-                F.col("v").alias("part"),
-                "degree",
-                F.col("c").cast("long").alias("coreness"),
-            )
-            .withColumn("converged", F.lit(bool(t0 == t1)))
+    def coreness(c_frame: DataFrame) -> DataFrame:
+        # vertex-sized on both sides (two stat-less LogicalRDDs — the
+        # static planner would sort-merge): same size-gated hint
+        return deg.join(_vertex_hint(c_frame), "v").select(
+            F.col("v").alias("part"),
+            "degree",
+            F.col("c").cast("long").alias("coreness"),
         )
+
+    return deg.select("v", F.col("degree").alias("c")), und, step, coreness
+
+
+def _same_total(a: DataFrame, b: DataFrame) -> bool:
+    """Whether two k-core value frames have the same total Σc — one job.
+    The h-index update is monotone non-increasing, so consecutive rounds
+    have the same total iff no node moved."""
+    t = a.agg(F.sum("c")).union(b.agg(F.sum("c"))).collect()
+    return t[0][0] == t[1][0]
+
+
+def graph_kcore(
+    spark: SparkSession,
+    sf_dir: str,
+    rounds: int = 20,
+    max_order_items: int | None = 256,
+) -> DataFrame:
+    """K-core decomposition (coreness per node) over the part
+    co-purchase graph — the graph family's fourth leg next to
+    ``supplier_pagerank`` (centrality), ``connected_components``
+    (reachability) and ``graph_triangle_count`` (local density).  The
+    coreness of a node is the largest k such that it survives k-core
+    peeling; it is the standard dense-community / influential-spreader
+    signal and the degeneracy ordering behind many graph algorithms.
+
+    THE SCALE TRICK IS THE H-INDEX FIXPOINT (Lu et al. 2016, "The
+    H-index of a network node and its relation to degree and
+    coreness"): initialize c0(v) = degree(v) and iterate
+    c_{t+1}(v) = H({c_t(u) : u in N(v)}) — the h-index of the
+    neighbors' current values.  The sequence is monotone
+    non-increasing and converges EXACTLY to the coreness, replacing
+    the sequential peel-one-vertex-at-a-time algorithm with a
+    per-round bulk update every node computes independently — the
+    message-passing shape Spark executes well.  H over a neighbor
+    group is relational: rank neighbor values descending within the
+    node's partition and take MAX(LEAST(rank, value)) — tie order
+    among equal values cannot change an h-index, so the window is
+    cross-engine deterministic without a composite tie-break.
+
+    Like ``supplier_pagerank`` (iters=2), the REGISTERED form runs a
+    FIXED number of rounds so the DuckDB oracle replays it as an
+    unrolled CTE chain; ``graph_kcore_converged`` iterates to the true
+    fixpoint (the monotone total Σc is unchanged iff no node moved —
+    one scalar per round on the driver).  The oracle-gate corpora
+    converge within 20 rounds (sf0.001 and sf0.01 — measured 10 and
+    ~17-20 respectively), so registered rows are exact corenesses
+    there, not approximations; the pinned test checks them against
+    ``networkx.core_number``.  Denser corpora need more rounds (sf0.1
+    is not yet converged at 20); production uses the converged twin,
+    whose per-round cost is identical.
+
+    The output carries a ``converged`` flag (VERDICT r10 #4: the
+    convergence CLAIM needs a hard signal, not just a pytest pin):
+    after the fixed rounds, ONE extra probe round is evaluated and
+    ``converged`` is true iff the monotone total Σc would not move —
+    i.e. the returned corenesses ARE the fixpoint.  It rides every row
+    (a literal), so the driver's value hash fails the round a corpus
+    stops converging within ``rounds`` — a convergence regression can
+    no longer hide behind unchanged corenesses on the converged subset.
+    The oracle replays it as one more unrolled round compared by total.
+
+    Scale shape: per round, one equi-join (neighbor values onto the
+    edge view), one NODE-PARTITIONED window (never global), one
+    aggregate — all keyed on node id; the per-order item cap bounds
+    edge generation exactly as in the triangle census.  The rounds run
+    on ``fixed_point.iterate`` with a cut every 2 rounds and after the
+    last: between cuts the plan grows by one linear step, and the
+    sf0.1 A/B (3 reps each, warm scan; r13 bench provenance) measured
+    every-round 29.8-30.7 s, every-2 24.0-26.4 s (-19%) and every-4
+    39-41 s (the un-truncated plan re-derives rounds per
+    materialization).  Without cuts the LOGICAL plan grows per round
+    and driver-side analysis OOMs by round 8, caught live while
+    building this operator.
+
+    Output: ``(part, degree, coreness, converged)``.
+
+    Round-11 oracle: ``__spark_entry__._kcore_oracle_sql`` (imported by
+    the pinned test in tests/test_extensions.py) — the same
+    cap/edge/degree CTEs and the unrolled h-index rounds, replayed with
+    one more round and compared by total for the converged flag."""
+    c0, und, step, coreness = _kcore_parts(spark, sf_dir, max_order_items)
+    try:
+        cur, _ = iterate(c0, step, rounds, checkpoint_every=2)
+        # convergence probe: one extra round, compared by the monotone
+        # total — evaluated HERE while und is persisted
+        converged = _same_total(cur, step(cur))
+        return coreness(cur).withColumn("converged", F.lit(converged))
     finally:
         und.unpersist()
 
@@ -8308,82 +8272,12 @@ def graph_kcore_converged(
     update until the fixpoint (the monotone non-increasing total Σc is
     unchanged iff no node changed — ONE scalar driver check per round,
     the ``supplier_pagerank_converged`` discipline), bounded by
-    ``max_rounds`` as a runaway guard.  Not registered — convergence
-    depth is data-dependent, so there is no fixed-depth SQL replay;
-    correctness rides the pinned equality against the fixed-round form
-    on corpora where that form converges."""
-    from pyspark.sql.window import Window
-
-    edges, und = _copurchase_undirected(spark, sf_dir, max_order_items)
-    deg = (
-        und.groupBy("v")
-        .agg(F.count(F.lit(1)).cast("long").alias("degree"))
-        .localCheckpoint(eager=True)
-    )
-    # hash-partition on the window key + append per-node self rows
-    # before caching — the same one-join fused round as graph_kcore
-    # (see the comment there)
-    und = (
-        und.select("v", "u", F.lit(0).alias("_self"))
-        .unionAll(
-            deg.select(
-                "v", F.col("v").alias("u"), F.lit(1).alias("_self")
-            )
-        )
-        .repartition(F.col("v"))
-        .persist()
-    )
-    cur = deg.select("v", F.col("degree").alias("c"))
-    prev_ids: set[int] = set()
-    total = cur.agg(F.sum("c")).collect()[0][0]
-    w = Window.partitionBy("v").orderBy("_self", F.desc("cu"))
-    # size-gated vertex broadcast hints — same rationale and knob as
-    # graph_kcore (the c-frames are stat-less LogicalRDDs every round)
-    n_nodes = deg.count()
-    bcast_max = int(
-        spark.conf.get("lsdp.graph.kcore.broadcastMaxNodes", "4000000")
-    )
-
-    def _vertex_hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if n_nodes <= bcast_max else df
-
+    ``max_rounds`` as a runaway guard, with a cut every round.  Not
+    registered — convergence depth is data-dependent, so there is no
+    fixed-depth SQL replay."""
+    c0, und, step, coreness = _kcore_parts(spark, sf_dir, max_order_items)
     try:
-        for _ in range(max_rounds):
-            nb = und.join(
-                _vertex_hint(
-                    cur.select(F.col("v").alias("u"), F.col("c").alias("cu"))
-                ),
-                "u",
-            ).select("v", "_self", "cu")
-            nxt = (
-                nb.withColumn("rn", F.row_number().over(w))
-                .groupBy("v")
-                .agg(
-                    F.least(
-                        F.max(
-                            F.when(
-                                F.col("_self") == 0,
-                                F.least(
-                                    F.col("rn").cast("long"), F.col("cu")
-                                ),
-                            )
-                        ),
-                        F.max(F.when(F.col("_self") == 1, F.col("cu"))),
-                    ).alias("c")
-                )
-                .localCheckpoint(eager=True)
-            )
-            ids = D._own_checkpoint_rdd_ids(nxt) & D._persistent_rdd_ids(spark)
-            n_total = nxt.agg(F.sum("c")).collect()[0][0]
-            D._release_rdds(spark, prev_ids)
-            cur, prev_ids = nxt, ids
-            if n_total == total:
-                break
-            total = n_total
-        return deg.join(_vertex_hint(cur), "v").select(
-            F.col("v").alias("part"),
-            "degree",
-            F.col("c").cast("long").alias("coreness"),
-        )
+        cur, _ = iterate(c0, step, max_rounds, done=_same_total)
+        return coreness(cur)
     finally:
         und.unpersist()

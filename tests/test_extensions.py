@@ -216,39 +216,6 @@ def test_connected_components(spark):
     assert out == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6}
 
 
-def test_connected_components_restores_aqe_on_failure(spark, monkeypatch):
-    """A Spark failure INSIDE the CC loop must not leave the session
-    permanently non-adaptive (ADVICE r7 / VERDICT r7 #4): the tiny-graph
-    AQE bypass restores spark.sql.adaptive.enabled in a finally, so even
-    a job error mid-round leaves the conf exactly as it found it."""
-    # patch the CONCRETE class: pyspark.sql.DataFrame is the abstract
-    # facade in Spark 4 and sym.count() dispatches to the classic subclass
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    nodes = spark.createDataFrame([(i,) for i in range(1, 5)], ["id"])
-    edges = spark.createDataFrame([(1, 2), (3, 4)], ["id_a", "id_b"])
-    orig = DataFrame.count
-    calls = {"n": 0}
-
-    def flaky(self):
-        # call 1 is sym.count() (before the AQE toggle); the next count
-        # is the in-loop convergence check — kill the loop there
-        calls["n"] += 1
-        if calls["n"] > 1:
-            raise RuntimeError("simulated mid-round job failure")
-        return orig(self)
-
-    monkeypatch.setattr(DataFrame, "count", flaky)
-    try:
-        with pytest.raises(RuntimeError, match="mid-round"):
-            D.connected_components(nodes, edges, driver_path_max_edges=0)
-    finally:
-        monkeypatch.undo()
-    assert calls["n"] > 1  # the failure really fired inside the loop
-    assert spark.conf.get("spark.sql.adaptive.enabled", "true") == before
-
-
 def test_semantic_tag_cache_bounded_and_unpersists(spark, tmp_path):
     """``staging.stage`` eviction (the bound the semantic-tag LRU used to
     give, ADVICE r7 / VERDICT r7 #5): an entry of another Spark
@@ -2536,21 +2503,23 @@ def test_checkpoint_release_scoped_to_own_rdds(spark):
     lineage-truncated localCheckpoint.  Pin: a bystander frame persisted
     while a checkpoint materializes is NOT in the checkpoint's own id
     set, and releasing that set leaves the bystander's storage intact."""
+    from logistream_data_pipeline_aws_spark.operators import fixed_point as FP
+
     bystander = spark.range(500).select(F.col("id"), (F.col("id") * 2).alias("v"))
     bystander.persist()
     bystander.count()  # materialize the bystander's blocks
-    by_ids = D._persistent_rdd_ids(spark)
+    by_ids = FP._persistent_rdd_ids(spark)
     ckpt = (
         spark.range(1000)
         .select(F.col("id"), (F.col("id") % 3).alias("k"))
         .localCheckpoint(eager=True)
     )
-    own = D._own_checkpoint_rdd_ids(ckpt)
+    own = FP._own_checkpoint_rdd_ids(ckpt)
     assert own, "accessor found no ids for a fresh localCheckpoint"
     assert not (own & by_ids), "bystander RDD leaked into the checkpoint's own ids"
-    D._release_rdds(spark, own)
+    FP._release_rdds(spark, own)
     # the bystander's storage must survive the release
-    assert by_ids <= D._persistent_rdd_ids(spark)
+    assert by_ids <= FP._persistent_rdd_ids(spark)
     assert bystander.count() == 500
     bystander.unpersist()
 
@@ -2695,11 +2664,13 @@ def test_corpus_dsir_weights_matches_oracle(spark):
 
 def test_graph_kcore_matches_oracle(spark):
     """R11-queue entry pinned ahead of registration: the h-index
-    coreness iteration must equal the DuckDB unrolled replay, the
-    fixed-round form must equal the true fixpoint at this SF (so
-    registered rows are exact corenesses), and the values must
-    discriminate."""
+    coreness iteration must equal the DuckDB unrolled replay, and both
+    the fixed-round and the converged form must equal
+    ``networkx.core_number`` over the same capped co-purchase edge list
+    built in DuckDB (so registered rows are exact corenesses at this SF),
+    and the values must discriminate."""
     import duckdb
+    import networkx as nx
 
     from logistream_data_pipeline_aws_spark.plans import extensions as X
     from tests.conftest import SF_SMALL
@@ -2711,20 +2682,31 @@ def test_graph_kcore_matches_oracle(spark):
     )
     exp = set(map(tuple, con.execute(_kcore_oracle_sql()).fetchall()))
     assert got == exp and got
-    # the probe-round flag: converged must be TRUE here (and the rows
-    # must equal the true fixpoint), so a corpus that stops converging
-    # within the fixed rounds flips every row and fails the value hash
+    # the probe-round flag: converged must be TRUE here, so a corpus
+    # that stops converging within the fixed rounds flips every row and
+    # fails the value hash
     assert {r[3] for r in got} == {True}
-    fix = {
+    g = nx.Graph(
+        con.execute(
+            "WITH bp0 AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p "
+            "FROM lineitem), "
+            "bp AS (SELECT o, p FROM (SELECT o, p, ROW_NUMBER() OVER "
+            "(PARTITION BY o ORDER BY p) AS rn FROM bp0) WHERE rn <= 256) "
+            "SELECT DISTINCT a.p, b.p FROM bp a JOIN bp b "
+            "ON a.o = b.o AND a.p < b.p"
+        ).fetchall()
+    )
+    core = nx.core_number(g)
+    ref = {(v, g.degree(v), c) for v, c in core.items()}
+    assert {r[:3] for r in got} == ref, (
+        "20 rounds no longer reach the true coreness at sf0.001"
+    )
+    conv = {
         tuple(r) for r in X.graph_kcore_converged(spark, SF_SMALL).collect()
     }
-    assert {r[:3] for r in got} == fix, (
-        "20 rounds no longer reach the fixpoint at sf0.001"
-    )
-    cs = {r[2] for r in got}
+    assert conv == ref
+    cs = set(core.values())
     assert len(cs) > 5 and all(c >= 1 for c in cs)
-    # coreness is bounded by degree everywhere
-    assert all(r[2] <= r[1] for r in got)
 
 
 def test_r11_queue_null_degeneracy(spark, tmp_path):
@@ -3050,26 +3032,6 @@ def test_substring_staged_twin_matches_inline_and_survives_sessions(
     assert refreshed == inline
 
 
-def test_graph_kcore_checkpoint_cadence_is_value_neutral(spark):
-    """VERDICT r12 #8: the lineage-truncation cadence is a PHYSICAL
-    knob — values (and the converged flag) must be identical at any
-    checkpoint_every, so the sf0.1 A/B in the r13 provenance compares
-    like for like and the registered entry (cadence default) cannot
-    drift semantically."""
-    from logistream_data_pipeline_aws_spark.plans import extensions as X
-    from tests.conftest import SF_SMALL
-
-    every1 = {
-        tuple(r)
-        for r in X.graph_kcore(spark, SF_SMALL, checkpoint_every=1).collect()
-    }
-    every2 = {
-        tuple(r)
-        for r in X.graph_kcore(spark, SF_SMALL, checkpoint_every=2).collect()
-    }
-    assert every1 == every2 and every1
-
-
 def test_substring_grouped_gram_staging_matches_single_pass(
     spark, tmp_path, monkeypatch
 ):
@@ -3249,19 +3211,6 @@ def test_substring_shard_bounds_many_cores_small_heap():
     assert X._substring_shard_bounds(fake32)[1] == max(
         int(750_000 * 4 / 48.0), 15_625
     )
-
-
-def test_graph_kcore_validates_checkpoint_every(spark):
-    """ADVICE r13: checkpoint_every=0 would ZeroDivisionError on the
-    cadence modulo and a negative value would silently disable lineage
-    truncation — both must be rejected at entry."""
-    from logistream_data_pipeline_aws_spark.plans import extensions as X
-    from tests.conftest import SF_SMALL
-
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        X.graph_kcore(spark, SF_SMALL, checkpoint_every=0)
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        X.graph_kcore(spark, SF_SMALL, checkpoint_every=-2)
 
 
 def test_reap_dead_stage_tmp_pid_reuse_and_foreign_hosts(tmp_path):
