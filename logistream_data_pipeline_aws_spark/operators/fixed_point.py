@@ -5,7 +5,10 @@
 state frame, cut the lineage now and then, free the blocks of the cut the
 new one replaces, and ask the driver whether to stop.  ``iterate`` is that
 loop, and this module is the only code that cuts lineage and frees blocks
-inside one.
+inside one.  Connected components and k-core run on it only above their
+driver gates: smaller graphs are collected and iterated in driver memory
+(a union-find, and numpy h-index rounds under
+``plans.extensions._KCORE_DRIVER_MAX_EDGES``).
 
 Why every period ends in an EAGER cut: without it the state frame's plan
 nests one level per round (or doubles, when a step references its input

@@ -2709,6 +2709,77 @@ def test_graph_kcore_matches_oracle(spark):
     assert len(cs) > 5 and all(c >= 1 for c in cs)
 
 
+
+def test_graph_kcore_driver_path_matches_distributed(spark, monkeypatch, tmp_path):
+    """Both k-core forms return the same rows and the same schema,
+    nullability included, whether their h-index rounds run on the driver
+    (a capped edge list under ``_KCORE_DRIVER_MAX_EDGES``) or distributed
+    (the gate forced to 0): on SF_SMALL, and on a lineitem where every
+    order holds one part, a graph with no edges and so no rows."""
+    import duckdb
+
+    from logistream_data_pipeline_aws_spark.plans import extensions as X
+    from tests.conftest import SF_SMALL
+
+    duckdb.connect().execute(
+        f"COPY (SELECT * FROM '{SF_SMALL}/lineitem.parquet' "
+        "QUALIFY ROW_NUMBER() OVER (PARTITION BY l_orderkey "
+        "ORDER BY l_linenumber) = 1) "
+        f"TO '{tmp_path}/lineitem.parquet' (FORMAT PARQUET)"
+    )
+    paths = []
+    for name, label in (("_kcore_hindex", "driver"), ("_kcore_parts", "distributed")):
+        real = getattr(X, name)
+
+        def spy(*a, _real=real, _label=label, **k):
+            paths.append(_label)
+            return _real(*a, **k)
+
+        monkeypatch.setattr(X, name, spy)
+
+    def run():
+        paths.clear()
+        out = []
+        for sf in (SF_SMALL, str(tmp_path)):
+            for op in (X.graph_kcore, X.graph_kcore_converged):
+                df = op(spark, sf)
+                out.append((df.schema, sorted(map(tuple, df.collect()))))
+        return out
+
+    on_driver = run()
+    assert set(paths) == {"driver"}
+    monkeypatch.setattr(X, "_KCORE_DRIVER_MAX_EDGES", 0)
+    distributed = run()
+    assert set(paths) == {"distributed"}
+    assert on_driver == distributed
+    assert on_driver[0][1] and on_driver[1][1]
+    assert on_driver[2][1] == [] and on_driver[3][1] == []
+
+
+def test_graph_kcore_with_arrow_disabled(spark):
+    """The driver path collects and returns through Arrow tables, which
+    do not read ``spark.sql.execution.arrow.pyspark.enabled``: with the
+    conf off (a bare session's default) ``graph_kcore`` returns the
+    oracle's rows, and the conf is restored."""
+    import duckdb
+
+    from logistream_data_pipeline_aws_spark.plans import extensions as X
+    from tests.conftest import SF_SMALL
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        got = {tuple(r) for r in X.graph_kcore(spark, SF_SMALL).collect()}
+    finally:
+        spark.conf.set(key, before)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW lineitem AS SELECT * FROM '{SF_SMALL}/lineitem.parquet'"
+    )
+    assert got == set(map(tuple, con.execute(_kcore_oracle_sql()).fetchall()))
+    assert got and spark.conf.get(key) == before
+
 def test_r11_queue_null_degeneracy(spark, tmp_path):
     """Pre-registration NULL probe for the r11 queue (the documents
     axis): NULL text must be gated identically on both engines for the

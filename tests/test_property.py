@@ -524,3 +524,72 @@ def test_doc_substring_spans_matches_bruteforce(spark, tmp_path_factory, texts):
         ).collect()
     }
     assert got == expected
+
+
+
+def _path(n):
+    return [(i, i + 1) for i in range(n - 1)]
+
+
+def _hindex_round_reference(adj, c):
+    """One h-index round, the plain loop: each node takes the h-index of
+    its neighbours' values, capped by its own value."""
+    out = {}
+    for v, nbrs in adj.items():
+        vals = sorted((c[u] for u in nbrs), reverse=True)
+        h = max(min(rank, x) for rank, x in enumerate(vals, 1))
+        out[v] = min(c[v], h)
+    return out
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(min_value=-20, max_value=20),
+            st.integers(min_value=-20, max_value=20),
+        ),
+        max_size=80,
+    ),
+    st.integers(min_value=0, max_value=12),
+)
+@example(edges=[(1, 2)], rounds=1)  # a single edge
+@example(edges=[(0, i) for i in range(1, 8)], rounds=1)  # a star
+@example(edges=_path(50), rounds=2)  # 2 rounds are far from the fixpoint
+@example(edges=[], rounds=3)  # no edges at all
+def test_kcore_hindex_matches_reference_and_core_number(edges, rounds):
+    """``graph_kcore``'s driver-side h-index rounds (pure numpy, no Spark
+    session): after every round up to ``rounds`` the values equal the
+    plain-loop reference, lie between the degree and the true coreness
+    and never rise; the probe flag says whether one more round would
+    move nothing; run to the fixpoint they give
+    ``networkx.core_number``."""
+    import networkx as nx
+    import numpy as np
+
+    from logistream_data_pipeline_aws_spark.plans.extensions import _kcore_hindex
+
+    pairs = sorted({(min(a, b), max(a, b)) for a, b in edges if a != b})
+    pa = np.array([a for a, _ in pairs], dtype=np.int64)
+    pb = np.array([b for _, b in pairs], dtype=np.int64)
+    g = nx.Graph(pairs)
+    core = nx.core_number(g)
+    adj = {v: list(g.adj[v]) for v in g}
+
+    node, degree, c, converged = _kcore_hindex(pa, pb, 10_000, probe=False)
+    assert converged
+    assert dict(zip(node.tolist(), c.tolist())) == core
+    assert dict(zip(node.tolist(), degree.tolist())) == dict(g.degree())
+
+    ref = dict(g.degree())
+    for r in range(rounds + 1):
+        _n, _d, c, converged = _kcore_hindex(pa, pb, r, probe=True)
+        got = dict(zip(node.tolist(), c.tolist()))
+        assert got == ref
+        assert all(g.degree(v) >= x >= core[v] for v, x in got.items())
+        nxt = _hindex_round_reference(adj, ref)
+        assert converged == (nxt == ref)
+        assert all(nxt[v] <= ref[v] for v in ref)
+        ref = nxt
+    if edges == _path(50):
+        assert not converged  # the path needs ~25 rounds
