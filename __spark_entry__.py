@@ -529,8 +529,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # cuts and block release of operators/dedup_family.py,
     # graph_kcore and supplier_pagerank) together with the
     # with_sequential_key docstring fix.  See COVERAGE.md "Fixed-point
-    # driver rotation".
+    # driver rotation".  corpus_quality_filter joined group 0 when it
+    # and corpus_gopher_rules became Arrow kernels; see COVERAGE.md
+    # "Arrow curation kernel rotation".
     # -- group 0: drifted tail entries, entering the head -------------
+        "corpus_quality_filter": X.corpus_quality_filter,
         "dim_junk_status": W.dim_junk_status,
         "dim_region": W.dim_region,
         "dim_geography": W.dim_geography,
@@ -582,7 +585,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fact_write_readback": X.fact_write_readback,
         "events_upsert_delete": X.events_upsert_delete,
         "events_upsert_changes": X.events_upsert_changes,
-        "events_upsert_timetravel": X.events_upsert_timetravel,
     # ===== ~50-entry driver window boundary.  Everything below is
     #    tail: digest-pinned since its green row
     #    (tests/test_rotation_ledger.py), stalest first; the unchanged
@@ -605,7 +607,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_unigram_score": X.doc_unigram_score,
         "sales_trendline_ols": X.sales_trendline_ols,
         "embedding_outliers": X.embedding_outliers,
-        "corpus_quality_filter": X.corpus_quality_filter,
         "corpus_split_assignment": X.corpus_split_assignment,
         "lineitem_column_profile": X.lineitem_column_profile,
         "fact_backfill_plan": X.fact_backfill_plan,
@@ -736,12 +737,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lineitem_abc_pareto_approx": A.lineitem_abc_pareto_approx,
         "graph_hop_distance": X.graph_hop_distance,
         "lineitem_abc_pareto": A.lineitem_abc_pareto,
+    # -- displaced from the head by the Arrow kernel rotation (unchanged)
+        "events_upsert_timetravel": X.events_upsert_timetravel,
     }
 
 
 # -- extension oracle fragments ---------------------------------------------
 
 _TOKENS = "string_split_regex(trim(text), '\\s+')"
+# Spark's split class: Java's \s is [ \t\n\x0B\f\r], RE2's leaves out
+# the vertical tab, so _TOKENS keeps 'a\x0bb' as one token where Spark
+# splits it.  corpus_quality_filter and corpus_gopher_rules split on this
+# class; the other _TOKENS consumers still diverge on text holding \x0b.
+_TOKENS_SPARK_WS = "string_split_regex(trim(text), '[ \\t\\n\\x0b\\f\\r]+')"
 # composed blocking key for the O(block²) ops — mirrors
 # dedup_family.composed_block_key (lang × 64-char length bucket × source)
 _BLOCK_KEY = (
@@ -1248,7 +1256,7 @@ def _ext_oracles() -> dict[str, str]:
             "FROM h"
         ),
         "corpus_quality_filter": (
-            "WITH tok AS (SELECT doc_id, lang, source, text, " + _TOKENS + " AS tk FROM documents), "
+            "WITH tok AS (SELECT doc_id, lang, source, text, " + _TOKENS_SPARK_WS + " AS tk FROM documents), "
             "m AS (SELECT doc_id, lang, source, text, tk, CAST(len(tk) AS DOUBLE) AS n_tok, "
             "CAST(len(list_filter(tk, t -> regexp_matches(t, '^[A-Za-z]+$'))) AS DOUBLE) AS n_alpha, "
             + ", ".join(f"{_sw_hits(lg)} AS hits_{lg}" for lg in ("en", "de", "es", "fr"))
@@ -3167,7 +3175,7 @@ def oracle_sql() -> dict[str, str]:
         # Gopher quality-rule boolean matrix: every gate in EXACT integer
         # arithmetic (cross-multiplied rationals); one tagged gram relation
         "WITH d AS (SELECT doc_id, lang, text FROM documents WHERE text IS NOT NULL), "
-        "tok AS (SELECT doc_id, lang, string_split_regex(trim(text), '\\s+') AS tk FROM d), "
+        "tok AS (SELECT doc_id, lang, " + _TOKENS_SPARK_WS + " AS tk FROM d), "
         "facts AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_words, "
         "CAST(list_reduce(list_prepend(0, list_transform(tk, t -> length(t))), (a, b) -> a + b) AS BIGINT) AS word_chars, "
         f"CAST(len(list_distinct(list_filter(list_transform(tk, t -> lower(t)), t -> {_gopher_sw}))) AS BIGINT) AS sw_hits "

@@ -116,17 +116,6 @@ BENCH_QUERIES = [
     "bm25_topk_staged",
     "doc_bigram_score_staged",
     "corpus_dsir_weights_staged",
-    # r15: Arrow-vectorized twin of corpus_quality_filter (VERDICT r14
-    # #3) — one tokenize pass per doc in an Arrow batch vs the
-    # expression form's per-consumer interpreted-HOF re-splits; pinned
-    # row-identical in tests/test_corpus_ops.py, benched as its own
-    # line (the prod-twin convention; resolves via EXTRA_BENCH)
-    "corpus_quality_filter_vectorized",
-    # r15 session 2: the same Arrow-twin treatment for the round's next
-    # tokenize-bound line (two interpreted CPU explodes + the gram
-    # shuffle -> one tokenize per doc per Arrow batch, zero exchanges);
-    # pinned row-identical in tests/test_corpus_ops.py
-    "corpus_gopher_rules_vectorized",
 ]
 
 # Measured scale shape for the registered + queued lines
@@ -612,28 +601,10 @@ _RAW_CACHE = None
 _WH_CACHE = None
 
 
-def _bench_quality_filter_vectorized(spark, sf_dir: str):
-    from logistream_data_pipeline_aws_spark.plans.extensions import (
-        corpus_quality_filter_vectorized,
-    )
-
-    return corpus_quality_filter_vectorized(spark, sf_dir)
-
-
-def _bench_gopher_rules_vectorized(spark, sf_dir: str):
-    from logistream_data_pipeline_aws_spark.plans.extensions import (
-        corpus_gopher_rules_vectorized,
-    )
-
-    return corpus_gopher_rules_vectorized(spark, sf_dir)
-
-
 EXTRA_BENCH = {
     "reference_warehouse_fact": _reference_warehouse_fact,
     "events_stickiness_hll_prod": _bench_stickiness_prod,
     "customer_rfm_scores_approx_prod": _bench_rfm_prod,
-    "corpus_quality_filter_vectorized": _bench_quality_filter_vectorized,
-    "corpus_gopher_rules_vectorized": _bench_gopher_rules_vectorized,
     # (the r12 queue registered at the r12 rotation — bm25_topk_staged
     # and the two staged-token consumers resolve from queries() now)
 }

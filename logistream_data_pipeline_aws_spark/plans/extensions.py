@@ -439,62 +439,25 @@ def events_stream_sessions_flushed(spark: SparkSession, sf_dir: str) -> DataFram
 
 def corpus_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The classic pretraining corpus filter chain, composed from the
-    text-analysis primitives: keep documents whose heuristic quality
-    clears a threshold, whose predicted language matches the tagged one,
-    and whose token count is in range.  Pure expressions end to end —
-    at 100 TB this is one embarrassingly parallel scan with every
-    predicate evaluated in whole-stage codegen."""
-    docs = load_table(spark, "documents", sf_dir)
-    tok = tokens(F.col("text"))
-    hits = {lg: stopword_hits(tok, lg) for lg in STOPWORDS}
-    e, d, s, f_ = (hits[lg] for lg in ("en", "de", "es", "fr"))
-    predicted = (
-        F.when((e >= d) & (e >= s) & (e >= f_), "en")
-        .when((d >= s) & (d >= f_), "de")
-        .when(s >= f_, "es")
-        .otherwise("fr")
-    )
-    n_tok = token_count("text")
-    return (
-        docs.select(
-            "doc_id", "lang", "source",
-            n_tok.alias("n_tokens"),
-            quality_score("text").alias("quality"),
-            predicted.alias("predicted_lang"),
-        )
-        .where(
-            (F.col("quality") >= 0.5)
-            & (F.col("predicted_lang") == F.col("lang"))
-            & F.col("n_tokens").between(8, 512)
-        )
-    )
+    text-analysis signals: keep documents whose heuristic quality
+    (``functions.text.quality_score``) is at least 0.5, whose
+    stopword-predicted language (``lang_id``'s rule) matches the tagged
+    one, and whose token count is in [8, 512].  NULL text is dropped.
 
+    One ``mapInPandas`` kernel: each document is tokenized once per
+    Arrow batch, and the token count, quality, the four stopword hit
+    counts and the predicted language all derive from that one pass.
+    Column expressions would re-split the text once per consumer in
+    interpreted higher-order lambdas, which get no codegen and no
+    common-subexpression elimination.  Tokenization is Spark's
+    ``split(trim(text), '\\s+')``: trim strips 0x20 only, the split
+    class is ``[ \\t\\n\\x0b\\f\\r]+`` with Java's keep-empty
+    semantics (``re.split`` matches), and empty text yields ``[""]``.
+    Quality rounds HALF_UP to 6 dp, as ``F.round`` does.
 
-def corpus_quality_filter_vectorized(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Value-identical Arrow-batched twin of ``corpus_quality_filter``
-    (r15, guide §4.2 — the ``minhash_signatures_vectorized`` pattern).
-
-    The expression form is a zero-exchange whole-stage-codegen scan
-    whose cost is per-row interpreted higher-order evaluation: the
-    token array is re-split per consumer (n_tokens, quality's three
-    token passes, four stopword_hits — HOF lambdas get no codegen and
-    no common-subexpression elimination).  Here each document is
-    tokenized ONCE per Arrow batch and every signal (token count,
-    quality, per-language stopword hits, predicted language) derives
-    from that single pass in CPython with C-speed primitives
-    (``str.split``-equivalent regex, ``isalpha``/``isascii``,
-    frozenset membership).  Tokenization mirrors the JVM exactly:
-    trim = strip of 0x20 only, split on the ASCII ``\\s`` class
-    ``[ \\t\\n\\x0b\\f\\r]+`` with Java's keep-empty split semantics
-    (``re.split`` matches), empty text yielding ``[""]``.  Rounding
-    follows ``quality_score_pandas``'s pinned HALF_UP emulation.
-
-    Pinned row-identical to the expression form on the fixture corpora
-    by ``tests/test_corpus_ops.py``; benched as its own line (the prod
-    -twin convention — the declared ``corpus_quality_filter`` entry and
-    its DuckDB oracle are untouched)."""
+    Scale shape: a pure map behind the CPU-stage round-robin
+    repartition (``parallelize_cpu_stage``: small parquet files scan as
+    one partition); no aggregation, no other exchange."""
     from logistream_data_pipeline_aws_spark.operators.dedup_family import (
         parallelize_cpu_stage,
     )
@@ -516,7 +479,7 @@ def corpus_quality_filter_vectorized(
 
         import pandas as pd
 
-        # once per task (guide §4.5): compiled ASCII-\s splitter and the
+        # once per task: compiled ASCII-\s splitter and the
         # four stopword sets
         tok_re = re.compile(r"[ \t\n\x0b\f\r]+")
         en, de, es, fr = (sws[lg] for lg in ("en", "de", "es", "fr"))
@@ -6555,9 +6518,9 @@ def corpus_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``g_word_count``:    40 <= n_words <= 100000
     - ``g_mean_word_len``: 3 <= total_word_chars / n_words <= 10
                            (as 3*n_words <= chars AND chars <= 10*n_words)
-    - ``g_stopwords``:     >= 2 DISTINCT stopwords of the document's
-                           ``lang`` present (unknown lang passes — no
-                           list to test against)
+    - ``g_stopwords``:     >= 2 DISTINCT lowered stopwords of the
+                           document's ``lang`` present (unknown or NULL
+                           lang passes — no list to test against)
     - ``g_dup_2gram``:     top 2-gram's share of all 2-grams <= 20%
                            (5 * top <= n_grams)
     - ``g_dup_3gram``:     top 3-gram share <= 18%  (100*top <= 18*n)
@@ -6567,157 +6530,18 @@ def corpus_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     Documents with fewer than n tokens have no n-grams: those gates
     pass vacuously (0 grams -> nothing repeated), mirrored as
     ``COALESCE`` in the oracle.  NULL text is excluded on both sides.
+    Gram keys are the space-joined raw token slices.
 
-    Round-10 oracle: documented in the pinned test
-    (tests/test_extensions.py::test_corpus_gopher_rules_matches_oracle)
-    — tok/counts CTEs plus one UNION-ALL gram relation re-aggregated
-    per (doc, n), stitched by the same cross-multiplied comparisons.
+    Oracle (``__spark_entry__.oracle_sql()["corpus_gopher_rules"]``):
+    tok/counts CTEs plus one UNION-ALL gram relation re-aggregated per
+    (doc, n), stitched by the same cross-multiplied comparisons.
 
-    Scale shape: one token explode (two aggregates: counts + distinct
-    stopword hits) and one tagged gram explode covering n=2,3,4 in a
-    SINGLE shuffle (gram size rides the key), both map-side
-    combinable; the final assembly is three broadcast-sized joins back
-    to the per-doc spine.  No window over the corpus, no float in the
-    verdicts."""
-    from logistream_data_pipeline_aws_spark.functions.arrays import explode_once
-    from logistream_data_pipeline_aws_spark.operators.dedup_family import (
-        parallelize_cpu_stage,
-    )
-
-    docs = load_table(spark, "documents", sf_dir).where(
-        F.col("text").isNotNull()
-    )
-    tok = tokens(F.col("text"))
-
-    # per-doc token facts: word count, summed word chars, distinct
-    # stopword hits for the doc's lang (token explode, one shuffle)
-    toks = explode_once(
-        parallelize_cpu_stage(docs.select("doc_id", "lang", "text")),
-        tokens(F.col("text")),
-        "w",
-        "doc_id",
-        "lang",
-    )
-    lang_sw = F.create_map(
-        *[
-            x
-            for lang, words in sorted(STOPWORDS.items())
-            for x in (F.lit(lang), F.array(*[F.lit(w) for w in words]))
-        ]
-    )
-    facts = toks.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_words"),
-        F.sum(F.length("w")).alias("word_chars"),
-        F.count_distinct(
-            F.when(
-                F.array_contains(
-                    F.coalesce(lang_sw[F.col("lang")], F.array()),
-                    F.lower(F.col("w")),
-                ),
-                F.lower(F.col("w")),
-            )
-        ).alias("sw_hits"),
-    )
-
-    # tagged n-gram relation: n=2,3,4 in ONE explode/shuffle.
-    # Closure factory, NOT `lambda i, n=n:` — a two-parameter lambda
-    # makes F.transform bind the second parameter to the ELEMENT INDEX,
-    # silently shadowing the seed (the documented higher-order-function
-    # pitfall; it turned the gram-size tag into the position here).
-    def grams(n: int):
-        def _tag(i):
-            return F.struct(
-                F.lit(n).alias("n"),
-                F.array_join(F.slice(tok, i + 1, n), " ").alias("g"),
-            )
-
-        return F.when(
-            F.size(tok) >= n,
-            F.transform(F.sequence(F.lit(0), F.size(tok) - n), _tag),
-        ).otherwise(F.array())
-
-    tagged = explode_once(
-        parallelize_cpu_stage(
-            docs.where(F.size(tok) >= 2).select("doc_id", "text")
-        ),
-        F.concat(grams(2), grams(3), grams(4)),
-        "gram",
-        "doc_id",
-    )
-    per_gram = tagged.groupBy(
-        "doc_id", F.col("gram.n").alias("n"), F.col("gram.g").alias("g")
-    ).agg(F.count(F.lit(1)).alias("c"))
-    gram_stats = (
-        per_gram.groupBy("doc_id", "n")
-        .agg(F.max("c").alias("top"), F.sum("c").alias("total"))
-        .groupBy("doc_id")
-        .pivot("n", [2, 3, 4])
-        .agg(F.first("top").alias("top"), F.first("total").alias("total"))
-    )
-
-    spine = docs.select("doc_id", "lang")
-    out = (
-        spine.join(facts, "doc_id", "left")
-        .join(gram_stats, "doc_id", "left")
-    )
-    n_words = F.coalesce(F.col("n_words"), F.lit(0))
-    chars = F.coalesce(F.col("word_chars"), F.lit(0))
-
-    def dup_gate(n: int, mul_top: int, mul_total: int):
-        top = F.coalesce(F.col(f"{n}_top"), F.lit(0))
-        total = F.coalesce(F.col(f"{n}_total"), F.lit(0))
-        return (top * mul_top) <= (total * mul_total)
-
-    g_wc = (n_words >= 40) & (n_words <= 100_000)
-    g_mwl = ((F.lit(3) * n_words) <= chars) & (chars <= (F.lit(10) * n_words))
-    # a lang with no stopword list (e.g. zh in the fixture) passes: the
-    # gate cannot be evaluated, and failing untestable docs would bias
-    # the corpus toward listed languages
-    g_sw = F.when(
-        lang_sw[F.col("lang")].isNotNull(),
-        F.coalesce(F.col("sw_hits"), F.lit(0)) >= 2,
-    ).otherwise(F.lit(True))
-    g2 = dup_gate(2, 5, 1)
-    g3 = dup_gate(3, 100, 18)
-    g4 = dup_gate(4, 100, 16)
-    return out.select(
-        "doc_id",
-        n_words.cast("long").alias("n_words"),
-        g_wc.alias("g_word_count"),
-        g_mwl.alias("g_mean_word_len"),
-        g_sw.alias("g_stopwords"),
-        g2.alias("g_dup_2gram"),
-        g3.alias("g_dup_3gram"),
-        g4.alias("g_dup_4gram"),
-        (g_wc & g_mwl & g_sw & g2 & g3 & g4).alias("passes"),
-    )
-
-
-def corpus_gopher_rules_vectorized(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Value-identical Arrow-batched twin of ``corpus_gopher_rules``
-    (r15, guide §4.2 — the ``corpus_quality_filter_vectorized``
-    pattern applied to the round's next tokenize-bound line).
-
-    The expression form pays TWO interpreted CPU explodes per run (the
-    token facts pass and the tagged 2/3/4-gram pass — the gram arrays
-    are built by uncodegen'd higher-order transforms) plus the
-    (doc, n, gram) shuffle for the top-gram counts.  Here each
-    document is tokenized ONCE per Arrow batch and every gate derives
-    from that pass in CPython (Counter for the top-gram shares) — a
-    pure map whose only exchange is the CPU-stage round-robin
-    repartition.  Tokenization mirrors the JVM exactly
-    (trim of 0x20 only, ASCII ``\\s`` split with keep-empty semantics);
-    gram keys are the same space-joined RAW token slices; the stopword
-    gate counts distinct LOWERED tokens intersecting the doc-lang list,
-    with unknown/NULL langs passing vacuously — each rule replicated
-    from the expression form's exact integer arithmetic.
-
-    Pinned row-identical to the expression form by
-    ``tests/test_corpus_ops.py``; benched as its own line (the
-    prod-twin convention — the declared ``corpus_gopher_rules`` entry
-    and its DuckDB oracle are untouched)."""
+    One ``mapInPandas`` kernel: each document is tokenized once per
+    Arrow batch (``corpus_quality_filter``'s tokenizer) and every gate
+    derives from that pass, the top-gram shares from a ``Counter`` per
+    gram size.  Scale shape: a pure map whose only exchange is the
+    CPU-stage round-robin repartition — no token or gram explode, no
+    (doc, n, gram) shuffle, no join back to a per-doc spine."""
     from logistream_data_pipeline_aws_spark.operators.dedup_family import (
         parallelize_cpu_stage,
     )
@@ -6746,7 +6570,7 @@ def corpus_gopher_rules_vectorized(
 
         import pandas as pd
 
-        # once per task (guide §4.5): the compiled ASCII-\s splitter
+        # once per task: the compiled ASCII-\s splitter
         tok_re = re.compile(r"[ \t\n\x0b\f\r]+")
         for pdf in batches:
             pdf = pdf[pdf["text"].notna()]
@@ -6761,8 +6585,7 @@ def corpus_gopher_rules_vectorized(
                 chars = sum(len(t) for t in toks)
                 sw = sws.get(lang) if isinstance(lang, str) else None
                 if sw is None:
-                    # no list for the doc's lang: untestable -> pass,
-                    # exactly the expression form's NULL-map-lookup arm
+                    # no list for the doc's lang: untestable -> pass
                     g_sw = True
                 else:
                     g_sw = len({t.lower() for t in toks} & sw) >= 2

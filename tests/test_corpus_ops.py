@@ -14,7 +14,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from logistream_data_pipeline_aws_spark.plans import extensions as X
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_ORACLE, SF_SMALL
 
 
 def test_pii_scrub_injection_and_redaction(spark):
@@ -475,104 +475,120 @@ def test_bpe_encode_stats_matches_python_greedy(spark, tmp_path):
         )
 
 
-def test_quality_filter_vectorized_matches_expression_form(spark):
-    """R15 (VERDICT r14 #3): the Arrow-batched quality-filter twin must
-    be row-identical — quality doubles included — to the declared
-    expression form on the fixture corpora, the
-    minhash_signatures_vectorized parity discipline.  Also pins the
-    plan shape: Arrow batches (MapInPandas/ArrowEval), never
-    row-pickled BatchEvalPython."""
-    for sf in (SF_SMALL, "/root/testdata/sf0.01"):
-        exp = sorted(
-            tuple(r) for r in X.corpus_quality_filter(spark, sf).collect()
+def _oracle_rows(name: str, sf: str) -> list[tuple]:
+    """The registry's DuckDB oracle for ``name`` over ``sf``'s documents."""
+    import duckdb
+
+    import __spark_entry__ as E
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'")
+    return sorted(map(tuple, con.execute(E.oracle_sql()[name]).fetchall()))
+
+
+def _edge_corpus(tmp_path, texts_at: dict[int, str | None], en_at=()) -> str:
+    """SF_SMALL's documents with the texts at the given rows replaced
+    (and ``lang`` set to 'en' at ``en_at``), written as a one-table
+    corpus under ``tmp_path``."""
+    base = pq.read_table(f"{SF_SMALL}/documents.parquet")
+    for col, edits in (("text", texts_at), ("lang", dict.fromkeys(en_at, "en"))):
+        vals = base.column(col).to_pylist()
+        for i, v in edits.items():
+            vals[i] = v
+        base = base.set_column(
+            base.schema.get_field_index(col), col, pa.array(vals)
         )
-        got_df = X.corpus_quality_filter_vectorized(spark, sf)
-        got = sorted(tuple(r) for r in got_df.collect())
-        assert got == exp and got, sf
-    plan = got_df._jdf.queryExecution().executedPlan().toString()
+    d = tmp_path / "sf"
+    d.mkdir()
+    pq.write_table(base, str(d / "documents.parquet"))
+    return str(d)
+
+
+# NULL text, whitespace-only text, tab-led repetitive text (trim strips
+# 0x20 only, so the split keeps a leading empty token), a two-token
+# document (the 3/4-gram gates pass vacuously), and a vertical tab,
+# which Spark's \s splits on and RE2's \s does not
+_VT_DOC = "\x0b".join(
+    "the quick brown fox jumps over the lazy dog and it is in you".split()
+) + " that a of and" * 6
+_EDGE_TEXTS = {
+    0: None,
+    1: "   ",
+    2: "\tthe a of and to in is it you that " * 10,
+    3: "one two",
+    4: _VT_DOC,
+}
+
+
+def test_quality_filter_matches_oracle(spark):
+    """The declared quality filter returns its DuckDB oracle's rows,
+    quality doubles included, at SF_SMALL and sf0.01, and runs as one
+    Arrow kernel: MapInPandas, never row-pickled BatchEvalPython."""
+    for sf in (SF_SMALL, SF_ORACLE):
+        df = X.corpus_quality_filter(spark, sf)
+        got = sorted(tuple(r) for r in df.collect())
+        assert got == _oracle_rows("corpus_quality_filter", sf) and got, sf
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan, plan
     assert "BatchEvalPython" not in plan, plan
 
 
-def test_gopher_rules_vectorized_matches_expression_form(spark):
-    """R15: the Arrow-batched Gopher-rule twin must be row-identical to
-    the declared expression form on the fixture corpora (the
-    corpus_quality_filter_vectorized parity discipline — every gate,
-    including the vacuous-pass arms for unknown langs and sub-n-gram
-    docs).  Also pins the plan shape: MapInPandas, zero exchanges,
-    never row-pickled BatchEvalPython; no aggregation shuffle (the only
-    exchange left is the CPU-stage round-robin repartition)."""
-    for sf in (SF_SMALL, "/root/testdata/sf0.01"):
-        exp = sorted(
-            tuple(r) for r in X.corpus_gopher_rules(spark, sf).collect()
-        )
-        got_df = X.corpus_gopher_rules_vectorized(spark, sf)
-        got = sorted(tuple(r) for r in got_df.collect())
-        assert got == exp and got, sf
-    plan = got_df._jdf.queryExecution().executedPlan().toString()
+def test_gopher_rules_matches_oracle(spark):
+    """The declared Gopher-rule matrix returns its DuckDB oracle's rows
+    at SF_SMALL and sf0.01, and runs as one Arrow kernel: MapInPandas,
+    no BatchEvalPython, and no aggregation shuffle (the only exchange is
+    the CPU-stage round-robin repartition)."""
+    for sf in (SF_SMALL, SF_ORACLE):
+        df = X.corpus_gopher_rules(spark, sf)
+        got = sorted(tuple(r) for r in df.collect())
+        assert got == _oracle_rows("corpus_gopher_rules", sf) and got, sf
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan, plan
     assert "BatchEvalPython" not in plan, plan
     assert "hashpartitioning" not in plan, plan
 
 
-def test_gopher_rules_vectorized_null_and_edge_text(spark, tmp_path):
-    """NULL text, whitespace-only text, and tab-led repetitive text
-    (where trim-space-only + ASCII \\s split + the top-gram counters
-    bite) must round-trip identically through both forms."""
-    import pyarrow as _pa
-    import pyarrow.parquet as _pq
-
-    d = tmp_path / "sf"
-    d.mkdir()
-    base = _pq.read_table(f"{SF_SMALL}/documents.parquet")
-    texts = base.column("text").to_pylist()
-    texts[0] = None
-    texts[1] = "   "
-    texts[2] = "\tthe a of and to in is it you that " * 10
-    texts[3] = "one two"  # 2 tokens: 3/4-gram gates pass vacuously
-    base = base.set_column(
-        base.schema.get_field_index("text"), "text", _pa.array(texts)
-    )
-    _pq.write_table(base, str(d / "documents.parquet"))
-    exp = sorted(
-        tuple(r) for r in X.corpus_gopher_rules(spark, str(d)).collect()
-    )
-    got = sorted(
-        tuple(r)
-        for r in X.corpus_gopher_rules_vectorized(spark, str(d)).collect()
-    )
-    assert got == exp
+def test_gopher_rules_null_and_edge_text_matches_oracle(spark, tmp_path):
+    """The edge texts (see ``_EDGE_TEXTS``) give the oracle's rows: the
+    NULL row is dropped on both sides, and the vertical-tab document
+    counts Spark's tokens."""
+    sf = _edge_corpus(tmp_path, _EDGE_TEXTS)
+    got = sorted(tuple(r) for r in X.corpus_gopher_rules(spark, sf).collect())
+    assert got == _oracle_rows("corpus_gopher_rules", sf)
+    n_words = {r[0]: r[1] for r in got}
+    vt_id = pq.read_table(f"{sf}/documents.parquet").column("doc_id")[4].as_py()
+    assert n_words[vt_id] == len(_VT_DOC.split())
 
 
-def test_quality_filter_vectorized_null_and_edge_text(spark, tmp_path):
-    """NULL text, whitespace-only text, and tab-led text (where JVM
-    trim-space-only + ASCII \\s split semantics bite) must round-trip
-    identically through both forms."""
-    import pyarrow as _pa
-    import pyarrow.parquet as _pq
-    import shutil
+def test_quality_filter_null_and_edge_text_matches_oracle(spark, tmp_path):
+    """The edge texts (see ``_EDGE_TEXTS``) give the oracle's rows; the
+    vertical-tab document is tagged English, so it passes the filter
+    with Spark's token count."""
+    sf = _edge_corpus(tmp_path, _EDGE_TEXTS, en_at=(4,))
+    got = sorted(tuple(r) for r in X.corpus_quality_filter(spark, sf).collect())
+    assert got == _oracle_rows("corpus_quality_filter", sf)
+    vt_id = pq.read_table(f"{sf}/documents.parquet").column("doc_id")[4].as_py()
+    assert [r[3] for r in got if r[0] == vt_id] == [len(_VT_DOC.split())]
 
-    d = tmp_path / "sf"
-    d.mkdir()
-    for t in ("documents", "events"):
-        src = f"{SF_SMALL}/{t}.parquet"
-        dst = str(d / f"{t}.parquet")
-        shutil.copy(src, dst) if not __import__("os").path.isdir(src) else None
-    base = _pq.read_table(f"{SF_SMALL}/documents.parquet")
-    n = base.num_rows
-    texts = base.column("text").to_pylist()
-    texts[0] = None
-    texts[1] = "   "
-    texts[2] = "\tthe a of and to in is it you that " * 3
-    base = base.set_column(
-        base.schema.get_field_index("text"), "text", _pa.array(texts)
-    )
-    _pq.write_table(base, str(d / "documents.parquet"))
-    exp = sorted(
-        tuple(r) for r in X.corpus_quality_filter(spark, str(d)).collect()
-    )
-    got = sorted(
-        tuple(r)
-        for r in X.corpus_quality_filter_vectorized(spark, str(d)).collect()
-    )
-    assert got == exp
+
+def test_quality_filter_and_gopher_rules_with_arrow_disabled(spark):
+    """``mapInPandas`` always moves batches as Arrow: with
+    ``spark.sql.execution.arrow.pyspark.enabled=false`` (a bare
+    session's default) both operators return the oracle's rows at
+    SF_SMALL, and the conf is restored."""
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        got = {
+            name: sorted(tuple(r) for r in op(spark, SF_SMALL).collect())
+            for name, op in (
+                ("corpus_quality_filter", X.corpus_quality_filter),
+                ("corpus_gopher_rules", X.corpus_gopher_rules),
+            )
+        }
+    finally:
+        spark.conf.set(key, before)
+    for name, rows in got.items():
+        assert rows == _oracle_rows(name, SF_SMALL) and rows, name
+    assert spark.conf.get(key) == before

@@ -1797,60 +1797,6 @@ def test_corpus_domain_cap_matches_oracle(spark):
     assert kinds == {"keep", "drop_capped"}
 
 
-def _gopher_oracle_sql(docs_rel: str) -> str:
-    """The corpus_gopher_rules DuckDB replay (round-10 oracle): token
-    facts + a UNION-ALL tagged gram relation, stitched by the same
-    cross-multiplied integer comparisons."""
-    sw_case = (
-        "CASE lang "
-        "WHEN 'de' THEN list_contains(['der','die','das','und','ist','ich','nicht','ein','mit','zu'], t) "
-        "WHEN 'en' THEN list_contains(['the','a','of','and','to','in','is','it','you','that'], t) "
-        "WHEN 'es' THEN list_contains(['el','la','de','que','y','en','un','por','con','una'], t) "
-        "WHEN 'fr' THEN list_contains(['le','la','de','et','un','une','est','pour','que','dans'], t) "
-        "ELSE FALSE END"
-    )
-
-    def gram_leg(n: int) -> str:
-        return (
-            f"SELECT doc_id, {n} AS n, "
-            f"unnest(list_transform(range(0, len(tk) - {n - 1}), "
-            f"i -> array_to_string(tk[(i+1):(i+{n})], ' '))) AS g "
-            f"FROM tok WHERE len(tk) >= {n}"
-        )
-
-    return (
-        f"WITH d AS (SELECT doc_id, lang, text FROM {docs_rel} WHERE text IS NOT NULL), "
-        "tok AS (SELECT doc_id, lang, string_split_regex(trim(text), '\\s+') AS tk FROM d), "
-        "facts AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_words, "
-        "CAST(list_reduce(list_prepend(0, list_transform(tk, t -> length(t))), (a, b) -> a + b) AS BIGINT) AS word_chars, "
-        f"CAST(len(list_distinct(list_filter(list_transform(tk, t -> lower(t)), t -> {sw_case}))) AS BIGINT) AS sw_hits "
-        "FROM tok), "
-        "g AS (" + gram_leg(2) + " UNION ALL " + gram_leg(3) + " UNION ALL " + gram_leg(4) + "), "
-        "pg AS (SELECT doc_id, n, g, COUNT(*) AS c FROM g GROUP BY 1, 2, 3), "
-        "gs AS (SELECT doc_id, n, MAX(c) AS top, SUM(c) AS total FROM pg GROUP BY 1, 2), "
-        "pv AS (SELECT doc_id, "
-        "COALESCE(MAX(CASE WHEN n = 2 THEN top END), 0) AS t2, COALESCE(MAX(CASE WHEN n = 2 THEN total END), 0) AS s2, "
-        "COALESCE(MAX(CASE WHEN n = 3 THEN top END), 0) AS t3, COALESCE(MAX(CASE WHEN n = 3 THEN total END), 0) AS s3, "
-        "COALESCE(MAX(CASE WHEN n = 4 THEN top END), 0) AS t4, COALESCE(MAX(CASE WHEN n = 4 THEN total END), 0) AS s4 "
-        "FROM gs GROUP BY doc_id) "
-        "SELECT d.doc_id, COALESCE(f.n_words, 0) AS n_words, "
-        "(COALESCE(f.n_words, 0) >= 40 AND COALESCE(f.n_words, 0) <= 100000) AS g_word_count, "
-        "(3 * COALESCE(f.n_words, 0) <= COALESCE(f.word_chars, 0) AND COALESCE(f.word_chars, 0) <= 10 * COALESCE(f.n_words, 0)) AS g_mean_word_len, "
-        "(CASE WHEN d.lang IN ('de','en','es','fr') THEN COALESCE(f.sw_hits, 0) >= 2 ELSE TRUE END) AS g_stopwords, "
-        "(COALESCE(p.t2, 0) * 5 <= COALESCE(p.s2, 0) * 1) AS g_dup_2gram, "
-        "(COALESCE(p.t3, 0) * 100 <= COALESCE(p.s3, 0) * 18) AS g_dup_3gram, "
-        "(COALESCE(p.t4, 0) * 100 <= COALESCE(p.s4, 0) * 16) AS g_dup_4gram, "
-        "((COALESCE(f.n_words, 0) >= 40 AND COALESCE(f.n_words, 0) <= 100000) "
-        "AND (3 * COALESCE(f.n_words, 0) <= COALESCE(f.word_chars, 0) AND COALESCE(f.word_chars, 0) <= 10 * COALESCE(f.n_words, 0)) "
-        "AND (CASE WHEN d.lang IN ('de','en','es','fr') THEN COALESCE(f.sw_hits, 0) >= 2 ELSE TRUE END) "
-        "AND (COALESCE(p.t2, 0) * 5 <= COALESCE(p.s2, 0) * 1) "
-        "AND (COALESCE(p.t3, 0) * 100 <= COALESCE(p.s3, 0) * 18) "
-        "AND (COALESCE(p.t4, 0) * 100 <= COALESCE(p.s4, 0) * 16)) AS passes "
-        "FROM d LEFT JOIN facts f ON d.doc_id = f.doc_id "
-        "LEFT JOIN pv p ON d.doc_id = p.doc_id"
-    )
-
-
 def test_corpus_gopher_rules_matches_oracle(spark):
     """R10-queue entry pinned ahead of registration: the Gopher-rule
     boolean matrix (integer-exact cross-multiplied gates) must equal
@@ -1861,19 +1807,17 @@ def test_corpus_gopher_rules_matches_oracle(spark):
     from logistream_data_pipeline_aws_spark.plans import extensions as X
     from tests.conftest import SF_SMALL
 
+    import __spark_entry__ as E
+
     got = {
         tuple(r)
         for r in X.corpus_gopher_rules(spark, SF_SMALL).collect()
     }
     con = duckdb.connect()
-    exp = set(
-        map(
-            tuple,
-            con.execute(
-                _gopher_oracle_sql(f"'{SF_SMALL}/documents.parquet'")
-            ).fetchall(),
-        )
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{SF_SMALL}/documents.parquet'"
     )
+    exp = set(map(tuple, con.execute(E.oracle_sql()["corpus_gopher_rules"]).fetchall()))
     assert got == exp
     cols = list(zip(*sorted(got)))
     split = sum(
@@ -1998,7 +1942,7 @@ def test_r10_queue_null_degeneracy(spark, tmp_path):
 
     from logistream_data_pipeline_aws_spark.plans import extensions as X
     from tests.conftest import SF_SMALL
-    from tests.test_extensions import _gopher_oracle_sql
+    import __spark_entry__ as E
 
     con = duckdb.connect()
     docs = str(tmp_path / "documents.parquet")
@@ -2040,7 +1984,7 @@ def test_r10_queue_null_degeneracy(spark, tmp_path):
     # corpus_gopher_rules: NULL text excluded; NULL lang hits the
     # unknown-lang pass arm on both sides
     got = {tuple(r) for r in X.corpus_gopher_rules(spark, sf).collect()}
-    exp = set(map(tuple, con.execute(_gopher_oracle_sql("documents")).fetchall()))
+    exp = set(map(tuple, con.execute(E.oracle_sql()["corpus_gopher_rules"]).fetchall()))
     assert got == exp and got
 
     # events_feature_matrix: NULL ts / NULL user_id gated both sides;
