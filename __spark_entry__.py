@@ -28,8 +28,8 @@ from logistream_data_pipeline_aws_spark.sources import metadata_dictionary as MD
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: the full fact key pipeline (dims built in-plan, 5-way
-    broadcast lookup join) on sf0.001."""
+    """Flagship: the full fact key pipeline (dims keyed on the driver,
+    5-way broadcast lookup join) on sf0.001."""
     return W.fact_lineitem(spark, "/root/testdata/sf0.001")
 
 
@@ -524,22 +524,34 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # changed tail entry fails CI until rotated back into the head.
     return {
     # ==== HEAD WINDOW (the driver records the first ~50) =============
-    # 39 slots hold the entries whose digests the fixed-point loop
-    # driver drifted (operators/fixed_point.py took over the lineage
-    # cuts and block release of operators/dedup_family.py,
-    # graph_kcore and supplier_pagerank) together with the
-    # with_sequential_key docstring fix.  See COVERAGE.md "Fixed-point
-    # driver rotation".  corpus_quality_filter joined group 0 when it
-    # and corpus_gopher_rules became Arrow kernels; see COVERAGE.md
-    # "Arrow curation kernel rotation".
+    # 41 slots hold the entries whose digests the driver-side
+    # keygen (functions/keys.with_sequential_key) and the one oracle
+    # whitespace class (_SPARK_WS) drifted; then the six r15 entries
+    # that had not been in the head since r15, and three entries the
+    # last two rotations changed.  See COVERAGE.md "Driver-side keygen
+    # and whitespace class rotation".
     # -- group 0: drifted tail entries, entering the head -------------
-        "corpus_quality_filter": X.corpus_quality_filter,
+        "tfidf_top_terms": X.tfidf_top_terms,
+        "doc_fingerprints": X.doc_fingerprints,
+        "lang_id": X.lang_id,
+        "text_stats": X.text_stats,
+        "corpus_length_histogram": X.corpus_length_histogram,
+        "sequence_packing": X.sequence_packing,
+        "dedup_golden_record": X.dedup_golden_record,
+        "pii_scrub_stats": X.pii_scrub_stats,
+        "dim_route_shapes": X.dim_route_shapes,
+    # -- group 1: r15 entries, entering the head (unchanged) ----------
+        "similarity_ivf_pq": X.similarity_ivf_pq,
+        "similarity_ivf_kmeans": X.similarity_ivf_kmeans,
+        "similarity_pq_adc": X.similarity_pq_adc,
+        "similarity_pq_refine": X.similarity_pq_refine,
+        "embedding_centered": X.embedding_centered,
+        "corpus_coreset_kcenter": X.corpus_coreset_kcenter,
+    # -- group 2: drifted entries already in the head ----------------
         "dim_junk_status": W.dim_junk_status,
         "dim_region": W.dim_region,
         "dim_geography": W.dim_geography,
-    # -- group 1: drifted entries already in the head ----------------
         "orders_zorder_clustering": X.orders_zorder_clustering,
-        "supplier_pagerank": X.supplier_pagerank,
         "fact_date_slice": X.fact_date_slice,
         "dim_product": W.dim_product,
         "dim_product_type": W.dim_product_type,
@@ -547,16 +559,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fact_lineitem": W.fact_lineitem,
         "fact_lineitem_bucketed": W.fact_lineitem_bucketed,
         "dedup_minhash_staged": X.dedup_minhash_staged,
-        "doc_bigram_score_staged": X.doc_bigram_score_staged,
-        "corpus_dsir_weights_staged": X.corpus_dsir_weights_staged,
         "bm25_topk_staged": X.bm25_topk_staged,
-        "doc_substring_spans": X.doc_substring_spans,
-        "doc_substring_dedup": X.doc_substring_dedup,
-        "doc_substring_dedup_staged": X.doc_substring_dedup_staged,
         "corpus_dedup_pipeline": X.corpus_dedup_pipeline,
-        "graph_kcore": X.graph_kcore,
-        "corpus_gopher_rules": X.corpus_gopher_rules,
-        "dedup_semantic": X.dedup_semantic_k8,
         "dedup_exact": X.dedup_exact,
         "dedup_survivors": X.dedup_survivors,
         "dedup_dropped": X.dedup_dropped,
@@ -572,24 +576,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_clusters": X.dedup_clusters,
         "dedup_near_survivors": X.dedup_near_survivors,
         "dedup_incremental_ingest": X.dedup_incremental_ingest,
-        "dedup_embedding": X.dedup_embedding,
         "dedup_minhash_lsh": X.dedup_minhash_lsh,
-    # -- group 2: unchanged since the staging rotation's green rows ---
-        "doc_bigram_score": X.doc_bigram_score,
-        "corpus_dsir_weights": X.corpus_dsir_weights,
         "scd2_daily_snapshot": X.scd2_daily_snapshot,
-        "warehouse_orc_readback": X.warehouse_orc_readback,
         "scd2_user_state": X.scd2_user_state,
-        "dim_customer": W.dim_customer,
         "bm25_topk": X.bm25_topk,
-        "fact_write_readback": X.fact_write_readback,
-        "events_upsert_delete": X.events_upsert_delete,
-        "events_upsert_changes": X.events_upsert_changes,
+    # -- group 3: unchanged, changed by the last two rotations --------
+        "corpus_quality_filter": X.corpus_quality_filter,
+        "graph_kcore": X.graph_kcore,
+        "corpus_gopher_rules": X.corpus_gopher_rules,
     # ===== ~50-entry driver window boundary.  Everything below is
     #    tail: digest-pinned since its green row
     #    (tests/test_rotation_ledger.py), stalest first; the unchanged
-    #    entries the staging and fixed-point rotations displaced from
-    #    the head close the tail.  The two sketch-only prod twins and
+    #    entries the staging, fixed-point, Arrow kernel and keygen
+    #    rotations displaced from the head close the tail.  The two
+    #    sketch-only prod twins and
     #    sql_profit_by_hierarchy stay deregistered (bench.py +
     #    tests/test_prod_twins.py pins).
     # ==================================================================
@@ -600,10 +600,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_salted_user_stats": X.events_salted_user_stats,
         "sales_forecast_ses": X.sales_forecast_ses,
         "events_stickiness_hll": X.events_stickiness_hll,
-        "tfidf_top_terms": X.tfidf_top_terms,
-        "doc_fingerprints": X.doc_fingerprints,
-        "lang_id": X.lang_id,
-        "text_stats": X.text_stats,
         "doc_unigram_score": X.doc_unigram_score,
         "sales_trendline_ols": X.sales_trendline_ols,
         "embedding_outliers": X.embedding_outliers,
@@ -613,7 +609,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_orc_readback": X.events_orc_readback,
         "dev_sample_cap": W.dev_sample_cap,
         "top_customers": A.top_customers,
-        "corpus_length_histogram": X.corpus_length_histogram,
         "sql_customer_order_distribution": V.sql_customer_order_distribution,
         "sql_orders_above_customer_avg": V.sql_orders_above_customer_avg,
         "sql_large_volume_orders": V.sql_large_volume_orders,
@@ -632,7 +627,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "geojson_routes": X.geojson_routes,
         "q1_pricing_summary": A.q1_pricing_summary,
         "routes_csv_readback": X.routes_csv_readback,
-        "sequence_packing": X.sequence_packing,
         "user_sessions": X.user_sessions,
         "sql_cheapest_supplier": V.sql_cheapest_supplier,
         "sql_excess_suppliers": V.sql_excess_suppliers,
@@ -646,12 +640,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sql_top_supplier": V.sql_top_supplier,
         "sql_unshipped_orders": V.sql_unshipped_orders,
         "metadata_dictionary": MDI.metadata_dictionary,
-        "dedup_golden_record": X.dedup_golden_record,
-        "embedding_centered": X.embedding_centered,
         "embedding_stats": X.embedding_stats,
-        "similarity_ivf_kmeans": X.similarity_ivf_kmeans,
-        "similarity_pq_adc": X.similarity_pq_adc,
-        "similarity_pq_refine": X.similarity_pq_refine,
         "similarity_topk": X.similarity_topk,
         "similarity_ann_lsh": X.similarity_ann_lsh,
         "similarity_ann_multiprobe": X.similarity_ann_multiprobe,
@@ -674,9 +663,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "incremental_agg_maintenance": X.incremental_agg_maintenance,
         "events_heavy_hitters": X.events_heavy_hitters,
         "events_json_readback": X.events_json_readback,
-        "corpus_coreset_kcenter": X.corpus_coreset_kcenter,
-        "pii_scrub_stats": X.pii_scrub_stats,
-        "similarity_ivf_pq": X.similarity_ivf_pq,
         "media_audio_windows": X.media_audio_windows,
         "events_stream_upsert": X.events_stream_upsert,
         "events_stream_jdbc_upsert": X.events_stream_jdbc_upsert,
@@ -712,7 +698,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sql_market_share": V.sql_market_share,
         "sql_lapsed_big_spenders": V.sql_lapsed_big_spenders,
     # -- displaced from the head by the staging rotation (unchanged) --
-        "dim_route_shapes": X.dim_route_shapes,
         "corpus_domain_cap": X.corpus_domain_cap,
         "events_feature_matrix": X.events_feature_matrix,
         "similarity_recall_audit": X.similarity_recall_audit,
@@ -739,17 +724,34 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lineitem_abc_pareto": A.lineitem_abc_pareto,
     # -- displaced from the head by the Arrow kernel rotation (unchanged)
         "events_upsert_timetravel": X.events_upsert_timetravel,
+    # -- displaced from the head by the keygen rotation (unchanged) ----
+        "supplier_pagerank": X.supplier_pagerank,
+        "doc_bigram_score_staged": X.doc_bigram_score_staged,
+        "corpus_dsir_weights_staged": X.corpus_dsir_weights_staged,
+        "doc_substring_spans": X.doc_substring_spans,
+        "doc_substring_dedup": X.doc_substring_dedup,
+        "doc_substring_dedup_staged": X.doc_substring_dedup_staged,
+        "dedup_semantic": X.dedup_semantic_k8,
+        "dedup_embedding": X.dedup_embedding,
+        "doc_bigram_score": X.doc_bigram_score,
+        "corpus_dsir_weights": X.corpus_dsir_weights,
+        "warehouse_orc_readback": X.warehouse_orc_readback,
+        "dim_customer": W.dim_customer,
+        "fact_write_readback": X.fact_write_readback,
+        "events_upsert_delete": X.events_upsert_delete,
+        "events_upsert_changes": X.events_upsert_changes,
     }
 
 
 # -- extension oracle fragments ---------------------------------------------
 
-_TOKENS = "string_split_regex(trim(text), '\\s+')"
-# Spark's split class: Java's \s is [ \t\n\x0B\f\r], RE2's leaves out
-# the vertical tab, so _TOKENS keeps 'a\x0bb' as one token where Spark
-# splits it.  corpus_quality_filter and corpus_gopher_rules split on this
-# class; the other _TOKENS consumers still diverge on text holding \x0b.
-_TOKENS_SPARK_WS = "string_split_regex(trim(text), '[ \\t\\n\\x0b\\f\\r]+')"
+# Spark's whitespace class: Java's \s is [ \t\n\x0B\f\r], RE2's (DuckDB)
+# leaves out the vertical tab, so an oracle on RE2's \s keeps 'a\x0bb' as
+# one token where Spark splits it.  Every oracle that splits, collapses or
+# excludes whitespace uses this class.
+_SPARK_WS = "[ \\t\\n\\x0b\\f\\r]"
+_TOKENS_SPARK_WS = "string_split_regex(trim(text), '" + _SPARK_WS + "+')"
+_PII_URL_RE = X.PII_URL_RE.replace("\\s", _SPARK_WS[1:-1])
 # composed blocking key for the O(block²) ops — mirrors
 # dedup_family.composed_block_key (lang × 64-char length bucket × source)
 _BLOCK_KEY = (
@@ -803,7 +805,7 @@ _SIMHASH_FP = " + ".join(f"CASE WHEN b{j} > 0 THEN {1 << j} ELSE 0 END" for j in
 
 _SIMHASH_CTE = (
     "ex AS (SELECT doc_id, unnest(list_transform("
-    + _TOKENS
+    + _TOKENS_SPARK_WS
     + f", t -> {_TOKEN_HASH})) AS h FROM documents), "
     f"v AS (SELECT doc_id, {_SIMHASH_VOTES} FROM ex GROUP BY doc_id), "
     f"fp AS (SELECT doc_id, CAST({_SIMHASH_FP} AS BIGINT) AS simhash FROM v)"
@@ -825,7 +827,7 @@ def _sw_hits(lang: str) -> str:
 # (shared by the dedup_clusters and dedup_near_survivors oracles)
 _CLUSTERS_CTE_PREFIX = (
     "WITH RECURSIVE pairs AS ("
-    "WITH tok AS (SELECT doc_id, " + _TOKENS + " AS tk FROM documents), "
+    "WITH tok AS (SELECT doc_id, " + _TOKENS_SPARK_WS + " AS tk FROM documents), "
     f"sh AS (SELECT doc_id, {_SHINGLES} AS sh FROM tok), "
     "base AS (SELECT doc_id, sh FROM sh WHERE len(sh) > 0), "
     "hs AS (SELECT doc_id, sh, list_transform(sh, x -> ('0x' || substr(md5(x), 1, 10))::BIGINT) AS hs FROM base), "
@@ -955,7 +957,7 @@ def _ext_oracles() -> dict[str, str]:
     )
     return {
         "dedup_exact": (
-            "SELECT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS content_hash, "
+            "SELECT md5(trim(regexp_replace(lower(text), '" + _SPARK_WS + "+', ' ', 'g'))) AS content_hash, "
             "MIN(doc_id) AS keep_id, COUNT(*) AS n_docs FROM documents "
             "GROUP BY 1"
         ),
@@ -1002,7 +1004,7 @@ def _ext_oracles() -> dict[str, str]:
         # value asc), max measure, min id — all per content hash
         "dedup_golden_record": (
             "WITH g AS (SELECT doc_id, "
-            "md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS content_hash, "
+            "md5(trim(regexp_replace(lower(text), '" + _SPARK_WS + "+', ' ', 'g'))) AS content_hash, "
             "lang, source, n_chars FROM documents), "
             "base AS (SELECT content_hash, MIN(doc_id) AS golden_id, "
             "CAST(COUNT(*) AS BIGINT) AS n_members, MAX(n_chars) AS max_chars "
@@ -1021,21 +1023,21 @@ def _ext_oracles() -> dict[str, str]:
         ),
         "dedup_survivors": (
             "WITH keeps AS (SELECT MIN(doc_id) AS doc_id FROM documents "
-            "GROUP BY md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))) "
+            "GROUP BY md5(trim(regexp_replace(lower(text), '" + _SPARK_WS + "+', ' ', 'g')))) "
             "SELECT d.doc_id, d.lang, d.source, d.n_chars FROM documents d "
             "WHERE EXISTS (SELECT 1 FROM keeps k WHERE k.doc_id = d.doc_id)"
         ),
         # the LEFT ANTI complement: rows exact dedup removes
         "dedup_dropped": (
             "WITH keeps AS (SELECT MIN(doc_id) AS doc_id FROM documents "
-            "GROUP BY md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))) "
+            "GROUP BY md5(trim(regexp_replace(lower(text), '" + _SPARK_WS + "+', ' ', 'g')))) "
             "SELECT d.doc_id, d.lang, d.source, d.n_chars FROM documents d "
             "WHERE NOT EXISTS (SELECT 1 FROM keeps k WHERE k.doc_id = d.doc_id)"
         ),
         # composed blocking key + block bound (see dedup_ngram_jaccard)
         "dedup_fuzzy_levenshtein": (
             "WITH base AS (SELECT doc_id, " + _BLOCK_KEY + " AS block, "
-            "substring(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), 1, 32) AS prefix "
+            "substring(trim(regexp_replace(lower(text), '" + _SPARK_WS + "+', ' ', 'g')), 1, 32) AS prefix "
             "FROM documents), "
             "bk AS (SELECT block FROM base GROUP BY block HAVING COUNT(*) BETWEEN 2 AND 1024), "
             "bb AS (SELECT base.* FROM base JOIN bk USING (block)) "
@@ -1063,7 +1065,7 @@ def _ext_oracles() -> dict[str, str]:
             "GROUP BY n.n_name, year(o.o_orderdate)"
         ),
         "dedup_minhash_lsh": (
-            "WITH tok AS (SELECT doc_id, " + _TOKENS + " AS tk FROM documents), "
+            "WITH tok AS (SELECT doc_id, " + _TOKENS_SPARK_WS + " AS tk FROM documents), "
             f"sh AS (SELECT doc_id, {_SHINGLES} AS sh FROM tok), "
             "base AS (SELECT doc_id, sh FROM sh WHERE len(sh) > 0), "
             "hs AS (SELECT doc_id, sh, list_transform(sh, x -> ('0x' || substr(md5(x), 1, 10))::BIGINT) AS hs FROM base), "
@@ -1112,7 +1114,7 @@ def _ext_oracles() -> dict[str, str]:
         # the 2..1024 block-size bound, mirroring
         # dedup_family.composed_block_key / bounded_blocks
         "dedup_ngram_jaccard": (
-            "WITH tok AS (SELECT doc_id, " + _BLOCK_KEY + " AS block, " + _TOKENS
+            "WITH tok AS (SELECT doc_id, " + _BLOCK_KEY + " AS block, " + _TOKENS_SPARK_WS
             + " AS tk FROM documents), "
             f"shx AS (SELECT doc_id, block, {_SHINGLES} AS sh FROM tok), "
             "base AS (SELECT doc_id, block, sh FROM shx WHERE len(sh) > 0), "
@@ -1222,7 +1224,7 @@ def _ext_oracles() -> dict[str, str]:
             "SELECT query_id, candidate_id, cos_sim, rank FROM ranked WHERE rank <= 5"
         ),
         "tfidf_top_terms": (
-            "WITH terms AS (SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term FROM documents), "
+            "WITH terms AS (SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '" + _SPARK_WS + "+')) AS term FROM documents), "
             "tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM terms GROUP BY 1, 2), "
             "dfx AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM terms GROUP BY 1), "
             "idf AS (SELECT term, round(ln((CAST((SELECT COUNT(*) FROM documents) AS DOUBLE) + 1.0) / (df + 1.0)) + 1.0, 6) AS idf FROM dfx), "
@@ -1232,12 +1234,12 @@ def _ext_oracles() -> dict[str, str]:
             "SELECT doc_id, term, tf AS term_freq, tfidf, rank FROM ranked WHERE rank <= 3"
         ),
         "text_stats": (
-            "WITH tok AS (SELECT doc_id, text, " + _TOKENS + " AS tk FROM documents), "
+            "WITH tok AS (SELECT doc_id, text, " + _TOKENS_SPARK_WS + " AS tk FROM documents), "
             "m AS (SELECT doc_id, text, tk, CAST(len(tk) AS DOUBLE) AS n_tok, "
             "CAST(len(list_filter(tk, t -> regexp_matches(t, '^[A-Za-z]+$'))) AS DOUBLE) AS n_alpha, "
             f"CAST({_sw_hits('en')} AS DOUBLE) AS sw FROM tok) "
             "SELECT doc_id, CAST(n_tok AS BIGINT) AS n_tokens, "
-            "CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS n_regex_tokens, "
+            "CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9" + _SPARK_WS[1:-1] + "]')) AS BIGINT) AS n_regex_tokens, "
             "CAST(length(text) AS BIGINT) AS n_chars_actual, "
             "CASE WHEN text IS NULL THEN NULL ELSE "
             "round(least(n_tok / 64.0, 1.0) * (0.5 + 0.3 * (CASE WHEN n_tok > 0 THEN n_alpha / n_tok ELSE 0.0 END) "
@@ -1245,7 +1247,7 @@ def _ext_oracles() -> dict[str, str]:
             "FROM m"
         ),
         "lang_id": (
-            "WITH tok AS (SELECT doc_id, lang, " + _TOKENS + " AS tk FROM documents), "
+            "WITH tok AS (SELECT doc_id, lang, " + _TOKENS_SPARK_WS + " AS tk FROM documents), "
             "h AS (SELECT doc_id, lang, "
             + ", ".join(f"{_sw_hits(lg)} AS hits_{lg}" for lg in ("en", "de", "es", "fr"))
             + " FROM tok) "
@@ -1273,7 +1275,7 @@ def _ext_oracles() -> dict[str, str]:
         ),
         # non-distinct 3-gram frequency: max share of all 3-grams per doc
         "doc_repetition": (
-            "WITH tok AS (SELECT doc_id, " + _TOKENS + " AS tk FROM documents), "
+            "WITH tok AS (SELECT doc_id, " + _TOKENS_SPARK_WS + " AS tk FROM documents), "
             "g AS (SELECT doc_id, unnest(list_transform(range(0, len(tk) - 2), "
             "i -> array_to_string(tk[(i+1):(i+3)], ' '))) AS gram "
             "FROM tok WHERE len(tk) >= 3), "
@@ -1284,19 +1286,19 @@ def _ext_oracles() -> dict[str, str]:
             "FROM pg GROUP BY doc_id"
         ),
         "corpus_length_histogram": (
-            "WITH m AS (SELECT CAST((len(" + _TOKENS + ") // 32) * 32 AS BIGINT) AS token_bucket, "
+            "WITH m AS (SELECT CAST((len(" + _TOKENS_SPARK_WS + ") // 32) * 32 AS BIGINT) AS token_bucket, "
             "CASE WHEN text IS NULL THEN NULL ELSE "
-            "round(least(CAST(len(" + _TOKENS + ") AS DOUBLE) / 64.0, 1.0) * "
-            "(0.5 + 0.3 * (CASE WHEN len(" + _TOKENS + ") > 0 THEN "
-            "CAST(len(list_filter(" + _TOKENS + ", t -> regexp_matches(t, '^[A-Za-z]+$'))) AS DOUBLE) / len(" + _TOKENS + ") ELSE 0.0 END) "
-            "+ 0.2 * least(CAST(len(list_filter(" + _TOKENS + ", t -> list_contains(" + _SW["en"] + ", lower(t)))) AS DOUBLE) / 4.0, 1.0)), 6) END AS q "
+            "round(least(CAST(len(" + _TOKENS_SPARK_WS + ") AS DOUBLE) / 64.0, 1.0) * "
+            "(0.5 + 0.3 * (CASE WHEN len(" + _TOKENS_SPARK_WS + ") > 0 THEN "
+            "CAST(len(list_filter(" + _TOKENS_SPARK_WS + ", t -> regexp_matches(t, '^[A-Za-z]+$'))) AS DOUBLE) / len(" + _TOKENS_SPARK_WS + ") ELSE 0.0 END) "
+            "+ 0.2 * least(CAST(len(list_filter(" + _TOKENS_SPARK_WS + ", t -> list_contains(" + _SW["en"] + ", lower(t)))) AS DOUBLE) / 4.0, 1.0)), 6) END AS q "
             "FROM documents) "
             "SELECT token_bucket, COUNT(*) AS n_docs, "
             "round(CAST(SUM(CAST(q AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*), 6) AS mean_quality "
             "FROM m GROUP BY token_bucket"
         ),
         "doc_fingerprints": (
-            "SELECT doc_id, md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp "
+            "SELECT doc_id, md5(trim(regexp_replace(lower(text), '" + _SPARK_WS + "+', ' ', 'g'))) AS fp "
             "FROM documents"
         ),
         "multimodal_meta": (
@@ -1500,7 +1502,7 @@ def _ext_oracles() -> dict[str, str]:
             "ORDER BY md5('winnow#' || CAST(doc_id AS VARCHAR)), doc_id) AS rn "
             "FROM documents) WHERE rn <= 20000), "
             "norm AS (SELECT doc_id, "
-            "trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS s FROM capped), "
+            "trim(regexp_replace(lower(text), '" + _SPARK_WS + "+', ' ', 'g')) AS s FROM capped), "
             "g AS (SELECT doc_id, list_transform(range(1, len(s) - 6), "
             "i -> ('0x' || substr(md5(substr(s, i, 8)), 1, 7))::BIGINT) AS hs "
             "FROM norm WHERE len(s) >= 11), "
@@ -1615,7 +1617,8 @@ def _ext_oracles() -> dict[str, str]:
             "FROM events GROUP BY 1"
         ),
         # PII scrub: the deterministic injection is mirrored exactly; the
-        # regexes live in the shared Java-regex/RE2 subset; 'g' flag because
+        # regexes live in the shared Java-regex/RE2 subset once the URL
+        # pattern's \s is spelled as Spark's class; 'g' flag because
         # Spark regexp_replace is replace-all
         "pii_scrub_stats": (
             "WITH e AS (SELECT doc_id, CASE "
@@ -1625,13 +1628,13 @@ def _ext_oracles() -> dict[str, str]:
             "SELECT doc_id, CASE WHEN t IS NULL THEN NULL ELSE "
             f"CAST(len(regexp_extract_all(t, '{X.PII_EMAIL_RE}')) AS BIGINT) END AS n_emails, "
             "CASE WHEN t IS NULL THEN NULL ELSE "
-            f"CAST(len(regexp_extract_all(t, '{X.PII_URL_RE}')) AS BIGINT) END AS n_urls, "
+            f"CAST(len(regexp_extract_all(t, '{_PII_URL_RE}')) AS BIGINT) END AS n_urls, "
             f"CAST(length(regexp_replace(regexp_replace(t, '{X.PII_EMAIL_RE}', '<EMAIL>', 'g'), "
-            f"'{X.PII_URL_RE}', '<URL>', 'g')) AS BIGINT) AS scrubbed_len FROM e"
+            f"'{_PII_URL_RE}', '<URL>', 'g')) AS BIGINT) AS scrubbed_len FROM e"
         ),
         # train/eval 3-gram decontamination; eval split = doc_id % 10 == 0
         "contamination_check": (
-            "WITH tok AS (SELECT doc_id, " + _TOKENS + " AS tk FROM documents), "
+            "WITH tok AS (SELECT doc_id, " + _TOKENS_SPARK_WS + " AS tk FROM documents), "
             f"shx AS (SELECT doc_id, {_SHINGLES} AS sh FROM tok), "
             "train AS (SELECT doc_id, sh FROM shx WHERE doc_id % 10 != 0), "
             "eg AS (SELECT DISTINCT unnest(sh) AS gram FROM shx WHERE doc_id % 10 = 0), "
@@ -1659,7 +1662,7 @@ def _ext_oracles() -> dict[str, str]:
         # per-source running token sum -> fixed-budget pack assignment
         "sequence_packing": (
             "WITH staged AS (SELECT doc_id, source, CASE WHEN text IS NULL THEN NULL "
-            "ELSE CAST(len(" + _TOKENS + ") AS BIGINT) END AS n_tokens FROM documents), "
+            "ELSE CAST(len(" + _TOKENS_SPARK_WS + ") AS BIGINT) END AS n_tokens FROM documents), "
             "packed AS (SELECT *, CAST(floor((SUM(n_tokens) OVER "
             "(PARTITION BY source ORDER BY doc_id) - n_tokens) / 256) AS BIGINT) AS pack_id FROM staged) "
             "SELECT source, pack_id, COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS pack_tokens, "
@@ -2023,7 +2026,7 @@ def _ext_oracles() -> dict[str, str]:
         # same signature/banding/threshold as dedup_minhash_lsh but with
         # the bucket cap on the corpus side only (floor 1, not 2)
         "dedup_incremental_ingest": (
-            "WITH tok AS (SELECT doc_id, " + _TOKENS + " AS tk FROM documents), "
+            "WITH tok AS (SELECT doc_id, " + _TOKENS_SPARK_WS + " AS tk FROM documents), "
             f"sh AS (SELECT doc_id, {_SHINGLES} AS sh FROM tok), "
             "base AS (SELECT doc_id, sh FROM sh WHERE len(sh) > 0), "
             "hs AS (SELECT doc_id, sh, list_transform(sh, x -> ('0x' || substr(md5(x), 1, 10))::BIGINT) AS hs FROM base), "
@@ -2225,7 +2228,7 @@ def _ext_oracles() -> dict[str, str]:
         # smaller side's fingerprint set)
         "doc_winnow_pairs": (
             "WITH norm AS (SELECT doc_id, "
-            "trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS s FROM documents), "
+            "trim(regexp_replace(lower(text), '" + _SPARK_WS + "+', ' ', 'g')) AS s FROM documents), "
             "g AS (SELECT doc_id, list_transform(range(1, len(s) - 6), "
             "i -> ('0x' || substr(md5(substr(s, i, 8)), 1, 7))::BIGINT) AS hs "
             "FROM norm WHERE len(s) >= 11), "
@@ -2302,7 +2305,7 @@ def oracle_sql() -> dict[str, str]:
             # prefix filter over word 5-shingles: rarity rank (df,
             # shingle) per doc, prefix cut n - ceil(t*n) + 1, bucket cap
             # 2..1024, exact-jaccard verify on the full shingle sets
-            "WITH tok AS (SELECT doc_id, " + _TOKENS + " AS tk FROM documents), "
+            "WITH tok AS (SELECT doc_id, " + _TOKENS_SPARK_WS + " AS tk FROM documents), "
             "shx AS (SELECT doc_id, "
             "CASE WHEN len(tk) >= 5 THEN list_distinct(list_transform(range(0, len(tk) - 4), "
             "i -> array_to_string(tk[(i+1):(i+5)], ' '))) ELSE [] END AS sh FROM tok), "
@@ -3098,7 +3101,7 @@ def oracle_sql() -> dict[str, str]:
         # status from the coverage CTEs; stitched by the precedence CASE
         _CLUSTERS_CTE_PREFIX.rstrip()
         + ", keeps AS (SELECT MIN(doc_id) AS doc_id FROM documents "
-        "GROUP BY md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))), "
+        "GROUP BY md5(trim(regexp_replace(lower(text), '" + _SPARK_WS + "+', ' ', 'g')))), "
         "cl AS (SELECT d.doc_id, CAST(LEAST(d.doc_id, COALESCE(m.min_reach, d.doc_id)) AS BIGINT) AS cluster_id "
         "FROM documents d LEFT JOIN reach_min m ON d.doc_id = m.src), "
         "sm AS (SELECT c.cluster_id, MIN(c.doc_id) AS surv_min FROM cl c "
@@ -3214,7 +3217,7 @@ def oracle_sql() -> dict[str, str]:
         # Okapi BM25 (k1=1.2, b=0.75): idf anchored by round(ln, 6),
         # per-term contributions DECIMAL(25,10)-summed (order-free)
         "WITH d AS (SELECT doc_id, lower(text) AS text FROM documents WHERE text IS NOT NULL), "
-        "tok AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS tk FROM d), "
+        "tok AS (SELECT doc_id, " + _TOKENS_SPARK_WS + " AS tk FROM d), "
         "dl AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl FROM tok), "
         "corpus AS (SELECT COUNT(*) AS n_docs, SUM(dl) / COUNT(*) AS avgdl FROM dl), "
         "terms AS (SELECT doc_id, unnest(tk) AS term FROM tok), "

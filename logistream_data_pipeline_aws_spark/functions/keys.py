@@ -4,18 +4,16 @@ The reference outsources surrogate keys to Redshift ``IDENTITY(1,1)``
 columns (data_warehouse/ddl_snowflake_schema.sql DS:3, DS:10, DS:18, DS:28,
 DS:41, DS:64, DS:72, DS:82): rows are written without keys and read back to
 learn them (etl_jobs/glue_master_etl.py GE:114, GE:117-128).  A Spark-native
-engine generates keys in-plan, killing the write→read-back round trip.
+engine generates keys itself, killing the write→read-back round trip.
 
 Three strategies, chosen by table size:
 
 - ``with_sequential_key`` — the ``row_number() OVER (ORDER BY natural
-  key)`` keys (exact 1..N contiguity matching IDENTITY semantics, fully
-  deterministic), computed as a triangular broadcast self-join over the
-  *deduplicated dimension*, not a window: O(d²) comparisons.  The
-  reference pipeline keys every dim with it, entity-sized
-  ``dim_customer`` / ``dim_product`` included: a traced warehouse load's
-  ``dim_customer`` write went 1.35 s -> 7.44 s for 1000 -> 4000
-  customers (the open ``FOUND:`` item in CHANGES.md).
+  key NULLS LAST)`` keys (exact 1..N contiguity matching IDENTITY
+  semantics, fully deterministic), ranked on the driver from one Arrow
+  collect of the deduplicated dimension.  Eager (one Spark job when the
+  frame is built; the result is a snapshot of its sources) and bounded
+  by ``_KEYGEN_MAX_ROWS``.  Every reference-pipeline dim uses it.
 - ``with_sequential_key_ranged`` — the same keys over one numeric natural
   key, decomposed into range buckets so no plan node is unpartitioned
   and the cost stays linear; the TPC-H key maps use it.
@@ -37,47 +35,48 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+_KEYGEN_MAX_ROWS = 1_000_000
+
+
 def with_sequential_key(
     df: DataFrame, key_name: str, order_by: Sequence[str]
 ) -> DataFrame:
-    """Add a deterministic 1..N surrogate key (IDENTITY parity).  Every
-    reference-pipeline dim uses it, entity-sized ``dim_customer`` /
-    ``dim_product`` included; only the TPC-H key maps use
-    ``with_sequential_key_ranged``.
+    """Add a deterministic 1..N surrogate key (IDENTITY parity): the
+    row's rank by ``order_by``, ascending, NULLS LAST, as DuckDB's
+    ``ROW_NUMBER()`` (NaN after every other double; strings by UTF-8
+    bytes).  ``order_by`` must be a unique natural key of ``df`` or the
+    assignment is nondeterministic between runs.
 
-    key = 1 + count of rows with lexicographically smaller natural key — a
-    triangular broadcast self-join over the deduplicated dim
-    instead of an empty-partition global window, so no stage ever funnels
-    through one task and the bench log stays free of single-partition
-    ``WindowExec`` warnings.  O(d²) comparisons; fine for d ≤ ~10⁴.
-
-    ``order_by`` must be a unique natural key of ``df`` or the assignment
-    is nondeterministic between runs.  NULL key components are legal and
-    ordered NULLS LAST (matching DuckDB/ANSI default ASC ordering — the
-    r5 dim-axis NULL probe caught Spark's bare ``<`` silently dropping
-    NULL members from the count, colliding them with key 1 while the
-    oracle's ROW_NUMBER put them last).
+    ``df`` is collected once with ``toArrow``, ranked with
+    ``pyarrow.compute.sort_indices`` and returned through
+    ``createDataFrame`` with ``df``'s schema plus ``key_name`` LONG NOT
+    NULL; neither call reads ``spark.sql.execution.arrow.pyspark.enabled``.
+    Eager: one Spark job when called, and the result is a snapshot of
+    ``df``'s sources at that moment.  Above ``_KEYGEN_MAX_ROWS`` rows (not
+    a dimension; the TPC-H key maps use ``with_sequential_key_ranged``)
+    it raises ``ValueError``.
     """
-    rhs = df.select(
-        F.lit(1).alias("__r_one"),
-        *[F.col(c).alias(f"__r_{c}") for c in order_by],
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
+
+    tbl = df.limit(_KEYGEN_MAX_ROWS + 1).toArrow()
+    if tbl.num_rows > _KEYGEN_MAX_ROWS:
+        raise ValueError(
+            f"with_sequential_key takes at most {_KEYGEN_MAX_ROWS} rows; use "
+            "with_sequential_key_ranged or with_surrogate_key at scale"
+        )
+    order = pc.sort_indices(
+        tbl, sort_keys=[(c, "ascending") for c in order_by], null_placement="at_end"
     )
-    # right sorts strictly before left, lexicographically, NULLS LAST:
-    # a non-null right precedes a null left; equality is null-safe so
-    # ties chain to the next component even through NULL members
-    lt = None
-    for i in reversed(range(len(order_by))):
-        l, r = F.col(order_by[i]), F.col(f"__r_{order_by[i]}")
-        lt_i = (r < l) | (l.isNull() & r.isNotNull())
-        lt = lt_i if lt is None else lt_i | (r.eqNullSafe(l) & lt)
-    joined = df.join(F.broadcast(rhs), lt, "left")
-    # count the join marker, not a key column: a matched smaller row may
-    # have NULL in any key component and must still count
-    key = F.count(F.col("__r_one")) + F.lit(1)
-    return (
-        joined.groupBy(*df.columns)
-        .agg(key.cast("long").alias(key_name))
-        .select(*df.columns, key_name)
+    key = np.empty(tbl.num_rows, dtype=np.int64)
+    key[order.to_numpy()] = np.arange(1, tbl.num_rows + 1, dtype=np.int64)
+    schema = T.StructType(
+        df.schema.fields + [T.StructField(key_name, T.LongType(), False)]
+    )
+    return df.sparkSession.createDataFrame(
+        tbl.append_column(key_name, pa.array(key)), schema
     )
 
 

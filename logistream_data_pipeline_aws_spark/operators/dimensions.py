@@ -43,8 +43,8 @@ def build_dimension(
     the key-assignment ordering, so keys are reproducible run-over-run.
     The parent join (hierarchy chaining, GE:123/GE:135) broadcasts the
     parent side — dims are small by construction.  The key is
-    ``with_sequential_key``'s triangular rank join, O(d²) in the dim's
-    row count.
+    ``with_sequential_key``'s driver-side rank: one Spark job when this
+    is called, and the result is a snapshot of the sources.
     """
     cols = [
         (F.col(v) if isinstance(v, str) else v).alias(k) for k, v in attrs.items()

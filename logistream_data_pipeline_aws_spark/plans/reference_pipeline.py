@@ -272,12 +272,12 @@ def build_warehouse(
     By default each dimension is staged — ``coalesce(1)`` then
     ``persist(MEMORY_AND_DISK)`` — before the fact references it: the
     shape of the reference's load (dims land first, the fact joins the
-    landed keys).  One load then derives each dim's dedup + keygen once;
-    the first action on a dim fills its cache and every later reader (a
-    child dim, the fact's broadcast lookups) scans it.  Dims are small by
-    construction — every one is keyed by ``with_sequential_key``'s
-    triangular rank join, fine for d ≤ ~10⁴ — so one partition each is
-    the layout AQE would coalesce them to anyway; without the
+    landed keys).  Every keyed dim is ranked on the driver by
+    ``with_sequential_key`` when this is called (one Spark job each, at
+    most ``_KEYGEN_MAX_ROWS`` rows); the first action on a dim fills its
+    cache and every later reader (a child dim, the fact's broadcast
+    lookups) scans it.  Dims are small by construction, so one partition
+    each is the layout AQE would coalesce them to anyway; without the
     ``coalesce(1)`` a persisted plan keeps its 32 shuffle partitions
     (AQE does not coalesce a cached plan's output) and each dim writes
     32 files.
@@ -287,7 +287,7 @@ def build_warehouse(
     by plan, so a staged dim outliving its load would serve old rows to
     a later load of a rewritten file at the same path.
     ``stage_dims=False`` returns the unstaged plans: the fact then
-    embeds five dim subplans and re-derives them on every action.
+    embeds the five dims' keyed snapshots as local relations.
     Results are identical either way.
     """
 

@@ -4,6 +4,9 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
+from logistream_data_pipeline_aws_spark.functions import keys
 from logistream_data_pipeline_aws_spark.functions.keys import (
     with_sequential_key,
     with_surrogate_key,
@@ -367,3 +370,39 @@ def test_hollow_split_guard_is_node_anchored(spark, tmp_path):
         assert _has_exchange_in_lineage(base.join(base.limit(1), "id"))
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+def test_sequential_key_with_arrow_disabled(spark):
+    """The keygen's collect and its return trip go through Arrow whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says; with the conf off
+    the keys and the schema are unchanged, and the conf is restored."""
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(conf, None)
+    spark.conf.set(conf, "false")
+    try:
+        rows = [("x", 2.0), (None, 9.0), (None, float("nan")), ("x", None)]
+        df = spark.createDataFrame(rows, "g string, n double")
+        out = with_sequential_key(df, "key", ["g", "n"])
+        got = {r.key: (r.g, r.n) for r in out.collect()}
+    finally:
+        if before is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, before)
+    assert spark.conf.get(conf, None) == before
+    assert [f.name for f in out.schema.fields] == ["g", "n", "key"]
+    assert out.schema["key"].dataType.simpleString() == "bigint"
+    assert not out.schema["key"].nullable
+    assert got[1] == ("x", 2.0) and got[2] == ("x", None)
+    assert got[3] == (None, 9.0)
+    assert got[4][0] is None and got[4][1] != got[4][1]  # NaN after 9.0
+
+
+def test_sequential_key_row_bound(spark, monkeypatch):
+    """A frame above ``_KEYGEN_MAX_ROWS`` is not a dimension: the driver
+    keygen raises and names the scale forms; at the bound it keys."""
+    monkeypatch.setattr(keys, "_KEYGEN_MAX_ROWS", 3)
+    at_bound = spark.range(3).withColumnRenamed("id", "k")
+    assert sorted(r.key for r in with_sequential_key(at_bound, "key", ["k"]).collect()) == [1, 2, 3]
+    with pytest.raises(ValueError, match="with_sequential_key_ranged.*with_surrogate_key"):
+        with_sequential_key(spark.range(4).withColumnRenamed("id", "k"), "key", ["k"])

@@ -83,6 +83,77 @@ def test_ranged_keygen_equals_global_rank(spark, keys):
     assert got == want
 
 
+_KEY_TYPES = {
+    "string": st.text(alphabet=["a", "A", "b", "B", "é", "É", "ß", "日", " "], max_size=3),
+    "int": st.integers(min_value=-(2**63), max_value=2**63 - 1),
+    "double": st.floats(allow_nan=True, allow_infinity=True),
+}
+
+
+@st.composite
+def _keyed_rows(draw):
+    """(key column types, rows of key tuples): 1-3 key columns of mixed
+    types, NULL allowed in every position, key tuples unique (NaN equal
+    to NaN, as in Spark and DuckDB)."""
+    types = tuple(draw(st.lists(st.sampled_from(sorted(_KEY_TYPES)), min_size=1, max_size=3)))
+    cell = [st.none() | _KEY_TYPES[t] for t in types]
+    rows = draw(
+        st.lists(
+            st.tuples(*cell),
+            max_size=30,
+            unique_by=lambda r: tuple("NaN" if v != v else v for v in r),
+        )
+    )
+    return types, rows
+
+
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(_keyed_rows())
+@example(case=(("string",), []))  # empty frame
+@example(case=(("string", "int", "double"), [(None, None, None)]))  # all-NULL key
+def test_sequential_key_equals_duckdb_row_number(spark, case):
+    """with_sequential_key must assign exactly DuckDB's
+    ROW_NUMBER() OVER (ORDER BY k1 ASC NULLS LAST, ...) on composite keys
+    of strings (non-ASCII, '' and case variants), ints and doubles (NaN,
+    infinities), with NULLs in every position."""
+    import duckdb
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    from logistream_data_pipeline_aws_spark.functions.keys import with_sequential_key
+
+    types, rows = case
+    spark_type = {"string": T.StringType(), "int": T.LongType(), "double": T.DoubleType()}
+    arrow_type = {"string": pa.string(), "int": pa.int64(), "double": pa.float64()}
+    keys = [f"k{i}" for i in range(len(types))]
+    schema = T.StructType(
+        [T.StructField("rid", T.LongType())]
+        + [T.StructField(k, spark_type[t]) for k, t in zip(keys, types)]
+    )
+    data = [(i, *r) for i, r in enumerate(rows)]
+    df = spark.createDataFrame(data, schema)
+    got = {r.rid: r.key for r in with_sequential_key(df, "key", keys).collect()}
+
+    tbl = pa.table(
+        {"rid": pa.array(range(len(rows)), pa.int64())}
+        | {
+            k: pa.array([r[i] for r in rows], arrow_type[t])
+            for i, (k, t) in enumerate(zip(keys, types))
+        }
+    )
+    order = ", ".join(f"{k} ASC NULLS LAST" for k in keys)
+    con = duckdb.connect()
+    con.register("t", tbl)
+    want = dict(
+        con.execute(f"SELECT rid, ROW_NUMBER() OVER (ORDER BY {order}) FROM t").fetchall()
+    )
+    assert got == want
+
+
 @_slow
 @given(
     st.lists(

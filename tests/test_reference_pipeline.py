@@ -116,9 +116,9 @@ def test_fact_plan_is_all_broadcast(warehouse):
 
 def test_fact_plan_reads_staged_dims(spark, tmp_path):
     """The fact's five lookups read the staged dims from their caches, so
-    no dim dedup or keygen is re-derived inside the fact plan: the
-    triangular rank join of the keygen is the DAG's only nested-loop
-    join.  Unstaged, the fact embeds the keygens."""
+    no dim dedup or keygen is re-derived inside the fact plan.
+    Unstaged, the fact embeds the keyed dims' driver-ranked snapshots
+    (one local relation each), never a keygen join."""
     routes = flatten_geojson_routes(read_geojson(spark, write_routes_geojson(tmp_path)))
     # 50 orders: a frame whose plan no other test's cached frames share
     raw = make_rawdata(spark, n_orders=50)
@@ -130,7 +130,7 @@ def test_fact_plan_reads_staged_dims(spark, tmp_path):
     assert "BroadcastNestedLoopJoin" not in staged
     assert "BroadcastHashJoin" in staged and "SortMergeJoin" not in staged
     embedded = RP.build_warehouse(raw, routes, stage_dims=False)
-    assert "BroadcastNestedLoopJoin" in _plan_nodes(embedded["fact_supplychain_events"])
+    assert _plan_nodes(embedded["fact_supplychain_events"]).count("LocalTableScan") >= 5
 
 
 def _write_csv(frame, path: str, scratch) -> None:
